@@ -34,7 +34,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scopus_spark import registry  # noqa: E402
-from scopus_spark.catalog import TABLES, load_table, register_views  # noqa: E402
+from scopus_spark.catalog import (  # noqa: E402
+    TABLES,
+    _parquet_parts,
+    load_table,
+    register_views,
+)
 from scopus_spark.session import get_spark  # noqa: E402
 
 
@@ -73,13 +78,7 @@ def stage_splittable_corpus(spark, sf_dir: str, n_splits: int) -> str:
     atexit.register(shutil.rmtree, staged, ignore_errors=True)
     for t in TABLES:
         src = f"{sf_dir}/{t}.parquet"
-        size = (
-            os.path.getsize(src)
-            if os.path.isfile(src)
-            else sum(
-                os.path.getsize(os.path.join(src, f)) for f in os.listdir(src)
-            )
-        )
+        size = sum(os.path.getsize(p) for p in _parquet_parts(src))
         n = max(1, min(n_splits, size // (64 << 10)))
         (
             load_table(spark, sf_dir, t)

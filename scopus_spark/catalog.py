@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scopus_spark.execution import spread
 from scopus_spark.session import configure
 
 TABLES: tuple[str, ...] = (
@@ -106,37 +107,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.table(name)
 
 
-def scan_splits_estimate(sf_dir: str, name: str) -> int:
-    """How many input splits the parquet scan will produce — driver-side
-    file metadata only (size / 128 MB default maxPartitionBytes, capped
-    by the row-group count, floored at 1). Zero Spark jobs, same
-    adjudication as row_count_estimate."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for p in _parquet_parts(f"{sf_dir}/{name}.parquet"):
-        by_bytes = max(1, os.path.getsize(p) // (128 << 20))
-        total += int(min(by_bytes, pq.ParquetFile(p).metadata.num_row_groups) or 1)
-    return max(1, total)
-
-
 def spread_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """table(), repartitioned to the session's core count WHEN the scan
-    would otherwise produce fewer splits than cores — the general-purpose
-    analogue of multimodal._codec_parallelism (guide §2.5/§2.6).
-
-    Use it for query paths whose map side runs heavy PER-ROW work
-    (interpreted higher-order expressions, per-row md5 chains, Python
-    codecs): a one-file bench corpus is ONE split, so that work would
-    serialize onto a single core, and AQE cannot help (it only re-splits
-    post-shuffle stages). The split check is driver-side parquet
-    metadata; at 100 TB the scan has >> cores splits and this returns
-    the plain table — NO exchange is added, so the corpus is never
-    gratuitously shuffled at scale."""
-    df = table(spark, sf_dir, name)
-    par = spark.sparkContext.defaultParallelism
-    if scan_splits_estimate(sf_dir, name) < par:
-        df = df.repartition(par)
-    return df
+    """table() under the one width rule, execution.spread: one task per
+    core when the scan would give fewer splits than cores, the plain
+    table otherwise. Use it for query paths whose map side runs heavy
+    PER-ROW work (interpreted higher-order expressions, per-row md5
+    chains, Python codecs)."""
+    return spread(table(spark, sf_dir, name))

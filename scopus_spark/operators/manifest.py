@@ -114,12 +114,19 @@ class CommitConflict(RuntimeError):
     re-run its operation against the new current snapshot."""
 
 
+# the characters Spark percent-escapes in a partition directory name
+# (ExternalCatalogUtils.escapePathName, non-Windows set)
+_PATH_ESCAPED = frozenset(map(chr, range(1, 0x20))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+
+
 def _partition_dir(val) -> str:
     # must render the same string Spark uses for the partition DIRECTORY
     # name, because manifest keys come from listing those directories
     if isinstance(val, bool):
         return "true" if val else "false"
-    return str(val)
+    return "".join(
+        f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in str(val)
+    )
 
 
 def _check_partition_type(schema: StructType, partition_col: str) -> None:
@@ -970,9 +977,14 @@ class VersionedTable:
     def _rel_dir_col():
         """The manifest-relative data dir (data/<commit>/__part=<val>)
         of each row's source file — path-component slicing of
-        input_file_name, scheme-agnostic."""
+        input_file_name, scheme-agnostic. input_file_name is a URI:
+        Hadoop percent-encodes the path (a space becomes %20, the '%'
+        of an escaped directory name %25) and leaves '+' as is, so the
+        slice is decoded with '+' protected — url_decode alone would
+        turn it into a space."""
         parts = F.split(F.input_file_name(), "/")
-        return F.concat_ws("/", F.slice(parts, -4, 3))
+        rel = F.concat_ws("/", F.slice(parts, -4, 3))
+        return F.url_decode(F.replace(rel, F.lit("+"), F.lit("%2B")))
 
     def _tombstone_dirs(
         self, m: dict, partition_values: list | None

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from scopus_spark.execution import spread
+
 RAW_MIME = "image/x-raw-rgb888"
 PNG_MIME = "image/png"
 JPEG_MIME = "image/jpeg"
@@ -70,26 +72,12 @@ FEATURE_SCHEMA = (
 )
 
 
-def _codec_parallelism(docs: DataFrame) -> DataFrame:
-    """Repartition a docs/media frame to the session's core count before
-    a Python codec stage. The corpus parquet is one small file -> ONE
-    input partition, which would serialize every encode/decode
-    mapInPandas pass onto a single core (measured: j34's 4:2:0 JPEG
-    decode at sf0.1 ran 170 s on 1 of 32 cores). The exchange moves only
-    the tiny staged corpus; at 100 TB inputs arrive multi-partition and
-    AQE coalesces this into a no-op-sized shuffle. Python-bound stages
-    are the one place partition count must track CORES, not bytes.
-    r11 (VERDICT r10 item 9): bounded below by the configured shuffle
-    width so the pin can never DOWNSIZE an already-wide media stream at
-    scale (guide §5) — identical at bench scale where both are 32."""
-    from scopus_spark.operators.similarity import pin_partitions
-
-    return docs.repartition(pin_partitions(docs.sparkSession))
-
-
 def attach_payload(docs: DataFrame) -> DataFrame:
-    """documents -> media table shape: utf-8 bytes stand in for real blobs."""
-    docs = _codec_parallelism(docs)
+    """documents -> media table shape: utf-8 bytes stand in for real blobs.
+    The media frame is spread to one task per core (execution.spread)
+    before any Python stage runs over it; every attach_* below builds on
+    this function or attach_raw_rgb, so each applies the rule once."""
+    docs = spread(docs)
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.col("text").cast("binary").alias("payload"),
@@ -119,8 +107,9 @@ def attach_raw_rgb(docs: DataFrame) -> DataFrame:
     buffers (the text's utf-8 bytes read as packed [r,g,b] triples; the
     trailing 0-2 bytes that don't complete a triple are ignored by the
     decoder, mirroring rawvideo's frame-size truncation). Single-row
-    images: width = floor(bytes/3), height = 1."""
-    docs = _codec_parallelism(docs)
+    images: width = floor(bytes/3), height = 1. Spread like
+    attach_payload."""
+    docs = spread(docs)
     payload = F.col("text").cast("binary")
     return docs.select(
         F.col("doc_id").alias("media_id"),
@@ -173,7 +162,6 @@ def attach_png(docs: DataFrame) -> DataFrame:
     byte-identical to j27's raw ground truth for the same rows. Encoding
     runs Arrow-batched in mapInPandas (pure map work); the staging
     encoder cycles all five PNG filter types row by row."""
-    docs = _codec_parallelism(docs)
     from scopus_spark.operators.png import encode_png
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -352,7 +340,6 @@ def attach_jpeg(docs: DataFrame) -> DataFrame:
     Encoding runs Arrow-batched in mapInPandas (pure map work). Callers
     pre-filter to 1..8191 bytes (JPEG's 16-bit width limit at 8 px per
     block)."""
-    docs = _codec_parallelism(docs)
     from scopus_spark.operators.jpeg import encode_jpeg
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -398,7 +385,6 @@ def attach_jpeg420(docs: DataFrame) -> DataFrame:
     R=G=B=Y, so the decoded statistics must still equal the byte-level
     ground truth. The h=8 image against 16-px-tall MCUs also pins the
     bottom-half pad-and-crop path."""
-    docs = _codec_parallelism(docs)
     from scopus_spark.operators.jpeg import encode_jpeg
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -508,7 +494,6 @@ def attach_wav(docs: DataFrame) -> DataFrame:
     construction is needed for exactness — container encode/decode must
     be byte-faithful or j35's hash breaks. Callers pre-filter to >= 2
     bytes (at least one complete sample)."""
-    docs = _codec_parallelism(docs)
     from scopus_spark.operators.wav import encode_wav
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -604,7 +589,6 @@ def attach_avi(docs: DataFrame) -> DataFrame:
     mandates (a decoder that gets any of them wrong scrambles pixels and
     breaks j36's hash). Callers pre-filter to >= 12 bytes (one complete
     frame)."""
-    docs = _codec_parallelism(docs)
     from scopus_spark.operators.avi import encode_avi
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

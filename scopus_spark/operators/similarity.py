@@ -32,19 +32,16 @@ from pyspark.sql import functions as F
 
 def pin_partitions(spark) -> int:
     """Partition count for the explicit pins on byte-tiny / CPU-heavy
-    candidate streams (guide §2.5): ``max(defaultParallelism,
-    spark.sql.shuffle.partitions)``.
-
-    r11 (VERDICT r10 item 9): the r10 pins used EXACTLY
-    ``defaultParallelism``, which at 100 TB would CAP a wide candidate
-    stream at the total core count — a stream can need far more
-    partitions than cores for memory/spill reasons (guide §5), and a
-    deployment expresses its shuffle width through
-    ``spark.sql.shuffle.partitions``. Taking the max keeps the
-    bench-scale behavior bit-identical (both terms are the session core
-    count there: SQL_CONFS pins shuffle partitions to 32 and the driver
-    runs local[32]) while never downsizing below the deployment's
-    configured width at scale. Tested at a simulated high width in
+    JVM candidate streams (similarity candidates, the j-pair join, the
+    a21 writes): ``max(defaultParallelism,
+    spark.sql.shuffle.partitions)``. A JVM task costs milliseconds, so
+    these pins may run several waves; the floor at the configured
+    shuffle width never downsizes a wide stream at scale, where a
+    stream can need more partitions than cores for memory/spill
+    reasons (guide §5). Python-worker stages do NOT use this pin: each
+    Python task pays a fixed worker-side cost, so they follow the one
+    width rule of execution.spread (one wave, and only when the input
+    has fewer splits than cores). Tested at a simulated high width in
     tests/test_properties.py."""
     try:
         conf_width = int(spark.conf.get("spark.sql.shuffle.partitions"))

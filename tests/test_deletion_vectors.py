@@ -346,3 +346,46 @@ def test_table_with_vt_dir_column_survives_tombstone_read(spark, tmp_path):
     )
     got = sorted((r.k, r._vt_dir, r.b) for r in t.read(spark).collect())
     assert got == [(1, "keep-me", 0)]
+
+
+# partition values whose directory names need escaping: a space and '%'
+# are percent-encoded in the file URI (and '%' in the directory name
+# itself); '+' is left as is by the URI but decodes to a space under
+# form-style url decoding
+ESCAPED = ["4-NOT SPECIFIED", "a+b", "50%", "x%20y"]
+
+
+def test_tombstones_apply_in_escaped_partition_dirs(spark, tmp_path):
+    """read() must drop tombstoned rows in every partition, also where
+    the directory name differs from its URI form (input_file_name is
+    percent-encoded, manifest dirs are not) — current, partition-pruned
+    and change-feed reads."""
+    rows = [(k, f"v{k}", ESCAPED[k % 4]) for k in range(12)]
+    t = VersionedTable(str(tmp_path / "t"))
+    t.write_initial(spark.createDataFrame(rows, "k long, v string, p string"), "p")
+    deleted = [0, 1, 2, 3, 6]
+    t.delete_keys(
+        spark.createDataFrame(
+            [(k, ESCAPED[k % 4]) for k in deleted], "k long, p string"
+        ),
+        key_cols=["k"],
+    )
+    live = sorted(r for r in rows if r[0] not in deleted)
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == live
+    for val in ESCAPED:
+        got = t.read(spark, partition_values=[val]).collect()
+        assert sorted(tuple(r) for r in got) == [r for r in live if r[2] == val]
+    ch = t.read_changes(spark, 1, 2)
+    assert sorted((r.k, r._change_type) for r in ch.collect()) == [
+        (k, "delete") for k in deleted
+    ]
+
+
+def test_partition_dir_matches_spark_escaping(spark):
+    """_partition_dir renders a value exactly as Spark names its
+    partition directory (ExternalCatalogUtils.escapePathName)."""
+    from scopus_spark.operators.manifest import _partition_dir
+
+    esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for c in map(chr, range(1, 256)):
+        assert _partition_dir(f"a{c}b") == esc.escapePathName(f"a{c}b"), repr(c)

@@ -309,20 +309,74 @@ def test_n10_audit_counts_share_one_window(spark, sf_dir):
 
 
 def test_multimodal_codec_keys_single_roundrobin_shuffle(spark, sf_dir):
-    """j33/j34 (JPEG), j35 (WAV), j36 (AVI): stage-encode, decode, and
-    feature extraction are pure map work in mapInPandas stages. The plan
-    carries exactly ONE exchange: the deliberate cores-sizing
-    RoundRobinPartitioning before the Python codec stage
-    (operators/multimodal._codec_parallelism — the staged corpus is one
-    input partition, which would serialize the decode onto one core;
-    measured 170 s -> 6 s at sf0.1 for j34). No hash/range shuffle of
-    payload bytes anywhere."""
-    for key in ("j33", "j34", "j35", "j36"):
+    """j18 (features), j27 (raw RGB), j33/j34 (JPEG), j35 (WAV), j36
+    (AVI): stage-encode, decode, and feature extraction are pure map
+    work in mapInPandas stages. The corpus is one input split, so the
+    plan carries exactly ONE exchange: execution.spread's cores-sizing
+    RoundRobinPartitioning(defaultParallelism) before the Python codec
+    stages — one task per core, one wave (a single split would
+    serialize the decode onto one core: measured 170 s -> 6 s at sf0.1
+    for j34). No hash/range shuffle of payload bytes anywhere."""
+    par = spark.sparkContext.defaultParallelism
+    for key in ("j18", "j27", "j33", "j34", "j35", "j36"):
         p = _plan(QUERIES[key](spark, sf_dir))
         assert p.count("Exchange") == 1, (key, p)
-        assert "RoundRobinPartitioning" in p, (key, p)
+        assert p.count(f"RoundRobinPartitioning({par})") == 1, (key, p)
         assert "hashpartitioning" not in p, (key, p)
         assert "rangepartitioning" not in p, (key, p)
+
+
+def test_spread_adds_no_exchange_over_multi_split_input(spark, sf_dir, tmp_path):
+    """execution.spread at scale: an input already written as >= cores
+    parquet files has >= cores splits, so the codec stage runs on the
+    scan's own partitions — no exchange anywhere before (or after) the
+    mapInPandas. A frame with no file-backed source keeps one wave."""
+    from scopus_spark.execution import spread
+    from scopus_spark.operators import multimodal
+
+    par = spark.sparkContext.defaultParallelism
+    out = str(tmp_path / "documents.parquet")
+    table(spark, sf_dir, "documents").repartition(par).write.parquet(out)
+    docs = spark.read.parquet(out)
+    assert len(docs.inputFiles()) >= par
+    p = _plan(multimodal.extract_features(multimodal.attach_payload(docs)))
+    assert "MapInPandas" in p, p
+    assert "Exchange" not in p, p
+    mem = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    assert f"RoundRobinPartitioning({par})" in _plan(spread(mem))
+
+
+def test_media_frame_build_starts_no_spark_job(spark, sf_dir):
+    """The split estimate is driver-side file metadata (inputFiles and
+    parquet footers): building every attach_* media frame and a
+    spread_scan schedules zero Spark jobs."""
+    from scopus_spark.catalog import spread_scan
+    from scopus_spark.operators import multimodal
+
+    sc = spark.sparkContext
+    group = "spread-zero-jobs"
+    sc.setJobGroup(group, "media frame build")
+    try:
+        docs = table(spark, sf_dir, "documents").filter(
+            F.octet_length("text").between(12, 8191)
+        )
+        for attach in (
+            multimodal.attach_payload,
+            multimodal.attach_raw_rgb,
+            multimodal.attach_png,
+            multimodal.attach_jpeg,
+            multimodal.attach_jpeg420,
+            multimodal.attach_wav,
+            multimodal.attach_avi,
+        ):
+            attach(docs)
+        spread_scan(spark, sf_dir, "embeddings")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        docs.limit(1).collect()  # the probe does see a job when one runs
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_c17_bloom_filter_injected_without_polluting_session(spark, sf_dir):

@@ -26,7 +26,7 @@ import pytest
 
 from scopus_spark.registry import all_oracles, all_queries
 
-from .conftest import SMOKE_SF_DIR, TEST_SF_DIR
+from .conftest import TEST_SF_DIR
 
 TABLES = (
     "region",
