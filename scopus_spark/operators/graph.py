@@ -29,25 +29,21 @@ convergence counter.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _driver_edge_threshold() -> int:
-    """Edge-count bound below which the iterative graph operators run
-    their exact sequential algorithm DRIVER-SIDE instead of scheduling
-    the distributed loop (r10, guide §1.2 step 1: at bench scale the
-    dup/residual graphs are a few thousand nodes and the loop's cost is
-    pure per-job fixed overhead — 2 jobs x N iterations x ~0.2 s — while
-    the same exact answer is milliseconds of driver work; at 100 TB the
-    edge list blows past the bound and the distributed path runs
-    unchanged). The collect is bounded by this threshold by
-    construction: the switch only fires after a count() of the realized
-    edge list. Same pattern as SCOPUS_FOOTER_DRIVER_FILES (manifest.py)
-    and catalog.spread_scan."""
-    return int(os.environ.get("SCOPUS_GRAPH_DRIVER_EDGES", "200000"))
+# Edge-count bound below which the iterative graph operators run their
+# exact sequential algorithm DRIVER-SIDE instead of scheduling the
+# distributed loop (r10, guide §1.2 step 1: at bench scale the
+# dup/residual graphs are a few thousand nodes and the loop's cost is
+# pure per-job fixed overhead — 2 jobs x N iterations x ~0.2 s — while
+# the same exact answer is milliseconds of driver work; at 100 TB the
+# edge list blows past the bound and the distributed path runs
+# unchanged). The collect is bounded by this threshold by construction:
+# the switch only fires after a count() of the realized edge list. Same
+# pattern as manifest.FOOTER_DRIVER_FILES and execution.spread.
+DRIVER_EDGES = 200_000
 
 
 def undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -70,8 +66,8 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
 
 def _cc_driver(und_rows, node_type: str, spark) -> DataFrame:
     """Exact min-label connected components via union-find on a BOUNDED
-    collected edge list (caller guarantees len(und_rows) <= the
-    _driver_edge_threshold bound). Output is a pure function of the edge
+    collected edge list (caller guarantees len(und_rows) <= its
+    driver_edge_threshold). Output is a pure function of the edge
     SET — independent of row order, partitioning, or engine — because
     comp_id = min member of each union-find set, computed after all
     unions."""
@@ -109,7 +105,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 30,
-    driver_edge_threshold: int | None = None,
+    driver_edge_threshold: int = DRIVER_EDGES,
 ) -> DataFrame:
     """(node, comp_id) where comp_id = min node id reachable from node.
 
@@ -118,14 +114,12 @@ def connected_components(
     to label isolated rows (comp = self).
 
     Below ``driver_edge_threshold`` symmetrized edges (default
-    $SCOPUS_GRAPH_DRIVER_EDGES, see _driver_edge_threshold) the
-    components are solved by union-find on the collected edge list — the
-    min-label output is algorithm-independent, so both paths return the
-    identical relation. ``max_iterations`` only governs the distributed
-    loop (the driver path has no convergence failure mode).
+    DRIVER_EDGES) the components are solved by union-find on the
+    collected edge list — the min-label output is algorithm-independent,
+    so both paths return the identical relation. ``max_iterations`` only
+    governs the distributed loop (the driver path has no convergence
+    failure mode).
     """
-    if driver_edge_threshold is None:
-        driver_edge_threshold = _driver_edge_threshold()
     # hash-partitioned on src BEFORE the persist: the cached partitioning
     # satisfies both the initial groupBy(src) and EVERY iteration's
     # neighbor join (InMemoryRelation preserves outputPartitioning), so
@@ -548,11 +542,11 @@ def coreness(
     dst: str = "dst",
     wave_rounds: int = 8,
     max_component_edges: int = 5_000_000,
-    driver_edge_threshold: int | None = None,
+    driver_edge_threshold: int = DRIVER_EDGES,
 ) -> DataFrame:
     """(node, coreness) — EXACT k-core number for every node that appears
     in at least one edge. Below ``driver_edge_threshold`` symmetrized
-    edges (default $SCOPUS_GRAPH_DRIVER_EDGES) the whole graph takes the
+    edges (default DRIVER_EDGES) the whole graph takes the
     exact sequential bucket peel driver-side (see the inline note); at
     scale, a hybrid two-phase peel with a DETERMINISTIC round bound (no
     data-dependent failure mode):
@@ -605,8 +599,6 @@ def coreness(
     )
     node_t = dict(live.dtypes)["src"]
     spark = edges.sparkSession
-    if driver_edge_threshold is None:
-        driver_edge_threshold = _driver_edge_threshold()
     # Coreness is a graph invariant: below the bound, run the SAME exact
     # sequential bucket peel phase 2 already trusts — on the whole
     # (collected) edge list, driver-side — instead of paying

@@ -107,6 +107,12 @@ _TOKEN_WINDOW = 128
 _BLOOM_BITS = 1024
 _BLOOM_WORDS = _BLOOM_BITS // 64
 _BLOOM_K = 4
+# rows per file before a clustered commit rolls a partition dir into a
+# second file (maxRecordsPerFile; see _write_commit_data)
+COMMIT_FILE_ROWS = 5_000_000
+# commits writing at most this many files read their footers driver-side
+# (see _footer_rowgroup_stats)
+FOOTER_DRIVER_FILES = 64
 
 
 class CommitConflict(RuntimeError):
@@ -510,7 +516,7 @@ class VersionedTable:
         if cluster:
             # r10 (guide §6.2 / Iceberg hash distribution-mode): cluster
             # rows by their target directory BEFORE partitionBy, so each
-            # dir gets one file per SCOPUS_COMMIT_FILE_ROWS rows instead
+            # dir gets one file per COMMIT_FILE_ROWS rows instead
             # of one per upstream task (an o4 merge wrote 30 dirs x 12
             # tasks = ~360 files of ~70 rows: 360 driver-side commit
             # renames, an executor-side footer pass, and 360 open costs
@@ -529,10 +535,7 @@ class VersionedTable:
             # cluster=False.
             staged = staged.repartition(F.col(_PART_DIR))
         (
-            staged.write.option(
-                "maxRecordsPerFile",
-                int(os.environ.get("SCOPUS_COMMIT_FILE_ROWS", "5000000")),
-            )
+            staged.write.option("maxRecordsPerFile", COMMIT_FILE_ROWS)
             .partitionBy(_PART_DIR)
             .parquet(commit_dir)
         )
@@ -656,7 +659,7 @@ class VersionedTable:
         usable min/max of a JSON-safe type (int/float/str) — missing
         entries mean "cannot skip", the superset rule.
 
-        Below ``SCOPUS_FOOTER_DRIVER_FILES`` (default 64) the footers
+        Below ``FOOTER_DRIVER_FILES`` the footers
         are read DRIVER-SIDE (pyarrow metadata-only — the
         row_count_estimate adjudication: a bench-scale commit writes a
         handful of files and a Spark job costs more than the reads);
@@ -696,9 +699,7 @@ class VersionedTable:
                         rec[c] = rgs
                 yield rel, rec
 
-        if len(rel_files) <= int(
-            os.environ.get("SCOPUS_FOOTER_DRIVER_FILES", "64")
-        ):
+        if len(rel_files) <= FOOTER_DRIVER_FILES:
             return dict(_footers(rel_files))
         rdd = spark.sparkContext.parallelize(
             rel_files, max(1, min(len(rel_files), 32))

@@ -845,11 +845,11 @@ def threshold_pair_join(
     # that stream already paid; fault-tolerance trade documented at the
     # other localCheckpoint sites). Lazy: plan construction stays
     # job-free. Measured: j43 one-shot 9.05 -> 6.58 s, j37 2.64 -> 2.37
-    # (key_times, idle, canonical order). `checkpoint_scored=False`
-    # returns the transparent un-truncated plan — used by the plan
-    # assertions in tests/test_threshold_pairs.py and the
-    # plans/r11/*_inner.txt evidence dumps (a LogicalRDD hides the join
-    # tree from explain).
+    # (noop write, idle, canonical order). `checkpoint_scored=False`
+    # returns the transparent un-truncated plan that the plan assertions
+    # in tests/test_threshold_pairs.py read: in the checkpointed plan
+    # (plans/r11/j37_after.txt) the scored stream is one `Scan
+    # ExistingRDD`, which hides the join tree from explain.
     scored = (
         cand.repartition(par)
         .join(va, F.col("vec_a") == F.col("va.vec_id"))
@@ -858,7 +858,6 @@ def threshold_pair_join(
     )
     if checkpoint_scored:
         scored = scored.localCheckpoint(eager=False)
-        return scored.filter(F.col("cos_sim") >= F.lit(tau))
     return scored.filter(F.col("cos_sim") >= F.lit(tau))
 
 

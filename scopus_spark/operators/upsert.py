@@ -38,9 +38,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _partition_dir(val) -> str:
-    return str(val)
+from scopus_spark.operators.manifest import _partition_dir
 
 
 def _recover_interrupted_swap(target_path: str, partition_col: str) -> None:

@@ -540,7 +540,7 @@ def a21_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         # An explicit partition count is exempt from AQE coalescing, so
         # the blob creates spread across the session's cores (one doc_id
         # still lands in exactly one task -> still one file per dir).
-        # Measured: a21 one-shot 8.37 -> 2.78 s (key_times, idle, noop).
+        # Measured: a21 one-shot 8.37 -> 2.78 s (idle, noop write).
         from scopus_spark.operators.similarity import pin_partitions
 
         sample.repartition(

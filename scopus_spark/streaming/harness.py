@@ -28,27 +28,20 @@ def scaled_stream_shuffle(spark: SparkSession):
     scale-adaptive'): every stateful streaming operator instantiates one
     state-store instance PER SHUFFLE PARTITION per micro-batch —
     checkpoint dirs, commit files, task launches — so a bench-scale
-    trigger paid 32 state commits for a handful of state rows. cores/4
-    (floor 8) keeps the fan-out proportional to the session's
+    trigger paid 32 state commits for a handful of state rows. cores/8
+    (floor 4) keeps the fan-out proportional to the session's
     parallelism (on a cluster defaultParallelism tracks the executor
-    fleet, so state still scales out); override with
-    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS where per-trigger volume
-    warrants more. Spark pins the count into the query's checkpoint at
-    first start (later passes reuse it); partition count changes state
-    LAYOUT only, never aggregate contents."""
+    fleet, so state still scales out). Spark pins the count into the
+    query's checkpoint at first start (later passes reuse it); partition
+    count changes state LAYOUT only, never aggregate contents."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     # r11 (VERDICT r10 item 6): cores/8 floor 4, measured against the r10
     # cores/4 floor 8 at sf0.1 idle — i16 2.14->2.07 s, i17 2.19->2.06 s
     # (min-of-N; state-store commits per trigger halve), i14 4.43->4.65 s
     # (within its ±0.3 s noise band — its cost is three real merges, not
     # state stores). Still proportional to the session's parallelism on a
-    # cluster and env-overridable where per-trigger volume warrants more.
-    n = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-            max(4, spark.sparkContext.defaultParallelism // 8),
-        )
-    )
+    # cluster.
+    n = max(4, spark.sparkContext.defaultParallelism // 8)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
@@ -133,22 +126,3 @@ class StreamRig:
 
     def cleanup(self) -> None:
         shutil.rmtree(self._root, ignore_errors=True)
-
-
-def stream_events_equivalent(
-    spark: SparkSession,
-    sf_dir: str,
-    build: Callable[[DataFrame], DataFrame],
-    output_mode: str = "complete",
-) -> list:
-    """Run a builder over the events table as a one-shot file stream and
-    return the final emitted rows (for complete mode, the last snapshot)."""
-    from scopus_spark.catalog import load_table
-
-    rig = StreamRig(spark)
-    try:
-        rig.drop_file(load_table(spark, sf_dir, "events"))
-        rows = rig.run(build, output_mode=output_mode)
-        return rows
-    finally:
-        rig.cleanup()

@@ -203,3 +203,39 @@ def test_upsert_recovers_interrupted_partition_delete(spark):
         assert got == {1: ("a", 1.0)}
         assert not os.path.exists(os.path.join(path, "seg=b"))
         assert not os.path.exists(os.path.join(path, ".seg=b.old"))
+
+
+def test_upsert_merges_into_escaped_partition_dirs(spark):
+    """Partition values Spark escapes in directory names ('%' -> '%25',
+    ':' -> '%3A') or renders differently from Python (True -> 'true')
+    must merge into their own directories, not be skipped as emptied."""
+    import os
+
+    with tempfile.TemporaryDirectory(prefix="scopus_upsert_esc_") as tmp:
+        path = f"{tmp}/t"
+        base = _rows(spark, [(1, "a%b", 1.0), (2, "x:y", 2.0)])
+        upsert_partitioned(path, base, ["id"], "seg")
+        delta = _rows(spark, [(1, "a%b", 10.0), (3, "x:y", 30.0)])
+        upsert_partitioned(path, delta, ["id"], "seg")
+        got = {r.id: (r.seg, r.val) for r in spark.read.parquet(path).collect()}
+        assert got == {1: ("a%b", 10.0), 2: ("x:y", 2.0), 3: ("x:y", 30.0)}
+        parts = sorted(d for d in os.listdir(path) if d.startswith("seg="))
+        assert parts == ["seg=a%25b", "seg=x%3Ay"]
+
+        flags = f"{tmp}/flags"
+        schema = "id long, seg boolean, val double"
+        upsert_partitioned(
+            flags,
+            spark.createDataFrame([(1, True, 1.0), (2, False, 2.0)], schema),
+            ["id"], "seg",
+        )
+        upsert_partitioned(
+            flags,
+            spark.createDataFrame([(1, True, 10.0), (3, False, 30.0)], schema),
+            ["id"], "seg",
+        )
+        got = {r.id: (r.seg, r.val) for r in spark.read.parquet(flags).collect()}
+        # Spark infers no boolean partition type: the values read back as strings
+        assert got == {1: ("true", 10.0), 2: ("false", 2.0), 3: ("false", 30.0)}
+        parts = sorted(d for d in os.listdir(flags) if d.startswith("seg="))
+        assert parts == ["seg=false", "seg=true"]

@@ -1,0 +1,265 @@
+"""Per-key profile of registry queries, layer by layer, in one session.
+
+Usage (from the repository root):
+
+    python tools/profile.py --keys d1,c8 [--sf-dir DIR] [--repeat N] [--out P.json]
+    python tools/profile.py --diff A.json B.json [--out DIFF.json]
+
+Each key runs as the deleted ``key_times``/``job_counts``/``capture_plans``
+loops ran it: build the DataFrame, then a ``noop``-format write (the full
+computation, no sink cost), after one shared warm-up of d1. Around that
+run the profile takes, with perfbench's tracing (``perfbench/tracing.py``):
+
+- the Python plan build: ``queries.build_ms`` and ``queries.py4j_calls``
+  (py4j round trips, garbage-collector commands excluded);
+- the formatted physical plan (``explainString``) and, read right after
+  it, the Catalyst phases ``catalyst.{analysis,optimization,planning}_ms``
+  (the later write adds its own analysis time to the frame's tracker);
+- the write: ``exec.noop_write_ms``; ``wall_s`` is build plus write, as
+  the deleted tools timed it, with the hypervisor ``steal_pct`` and the
+  1-minute load over the key's window;
+- from the Spark event log (written uncompressed to a temp dir, one job
+  property per key): ``exec.jobs``/``stages``/``tasks``, executor run,
+  CPU and GC ms, scheduler wait, input rows, shuffle and spill bytes,
+  and the Python-worker bytes and stage time. These count every job the
+  key ran; ``queries.eager_jobs`` says how many ran during the build
+  (n6's build runs jobs);
+- ``exec.persisted_rdds_after``: persisted RDDs alive after the write.
+
+Keys run in the order given, by default every registry key in registry
+order. Family-staged keys (a10-a12 ZIP corpus, table-layer keys, i16/i17
+feeds) memoize their staging per process, so the first key of a family
+pays it, as in a driver soak. With ``--repeat N`` each key runs N times
+back to back; ``wall_s`` is the fastest run and every other figure is the
+last run's. A failing key is recorded with its error and the run goes on;
+the exit status is then 1.
+
+``--diff A B`` prints, per key in both profiles, each metric of A and B
+and the ratio B/A: two scales of one corpus (``tools/scale_audit.py gen``
+builds an sf1 corpus) give per-key growth, two commits give before/after.
+
+The formatted plan of each key is the record's ``plan`` field, e.g.
+``jq -r .keys.a21.plan P.json > plans/r11/a21_after.txt``.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import sys
+import tempfile
+import time
+import traceback
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
+# pyspark imports cProfile, which imports the stdlib's `profile`: keep
+# this script's directory off sys.path so that import finds the stdlib
+sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != HERE]
+sys.path.insert(0, ROOT)
+
+from perfbench import tracing  # noqa: E402
+from tools.scale_audit import SRC  # noqa: E402  the sf0.1 corpus
+
+WARMUP_KEY = "d1"
+PHASE_BUILD = "queries.build"
+# event-log counter -> metric name (perfbench/run.py's names)
+EVENT_METRICS = {
+    "jobs": "exec.jobs", "stages": "exec.stages", "tasks": "exec.tasks",
+    "task_run_ms": "exec.task_run_ms", "task_cpu_ms": "exec.task_cpu_ms",
+    "gc_ms": "exec.gc_ms", "scheduler_wait_ms": "exec.scheduler_wait_ms",
+    "input_rows": "exec.input_rows",
+    "shuffle_write_bytes": "exec.shuffle_write_bytes",
+    "shuffle_read_bytes": "exec.shuffle_read_bytes",
+    "spill_bytes": "exec.spill_bytes",
+    "py_sent": "python.bytes_to_worker",
+    "py_received": "python.bytes_from_worker",
+    "python_stage_run_ms": "python.stage_run_ms",
+}
+
+
+def parse_args(argv):
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--keys", default="", help="comma-separated; default all")
+    ap.add_argument("--sf-dir", default=SRC)
+    ap.add_argument("--repeat", type=int, default=1)
+    ap.add_argument("--out", help="write the JSON record here")
+    ap.add_argument("--diff", nargs=2, metavar=("A", "B"),
+                    help="compare two profiles instead of running")
+    args = ap.parse_args(argv)
+    if args.repeat < 1:
+        ap.error("--repeat must be at least 1")
+    return args
+
+
+def cpu_times() -> tuple[int, int]:
+    """(steal, total) jiffies from /proc/stat."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:]]
+    return f[7] if len(f) > 7 else 0, sum(f[:8])
+
+
+def steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
+    total = after[1] - before[1]
+    return round(100.0 * (after[0] - before[0]) / total, 2) if total else 0.0
+
+
+def run_key(spark, tracer, fn, key: str, sf_dir: str, tag: str) -> dict:
+    """One build + explain + noop write of ``key``, its jobs tagged ``tag``."""
+    sc = spark.sparkContext
+    sc.setJobDescription(f"profile:{key}")
+    sc.setLocalProperty(tracing.OP_PROP, tag)
+    sc.setLocalProperty(tracing.PHASE_PROP, PHASE_BUILD)
+    try:
+        with tracer.span(PHASE_BUILD, op=tag):
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            build_s = time.perf_counter() - t0
+        sc.setLocalProperty(tracing.PHASE_PROP, "exec")
+        plan = sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        phases = tracing.catalyst_phases(spark, df)
+        t0 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        write_s = time.perf_counter() - t0
+    finally:
+        for prop in (tracing.OP_PROP, tracing.PHASE_PROP):
+            sc.setLocalProperty(prop, None)
+        sc.setJobDescription(None)
+    return {
+        "wall_s": round(build_s + write_s, 3),
+        "queries.build_ms": round(build_s * 1e3, 1),
+        "queries.py4j_calls": tracer.spans[-1]["py4j"],
+        **{f"catalyst.{p}_ms": ms for p, ms in sorted(phases.items())},
+        "exec.noop_write_ms": round(write_s * 1e3, 1),
+        "exec.persisted_rdds_after": sc._jsc.getPersistentRDDs().size(),
+        "plan": plan,
+    }
+
+
+def run_keys(queries, keys, sf_dir, repeat, events) -> tuple[dict, int]:
+    """Each key's record (event-log counters still to add) and the
+    session's cores; the session logs its events to ``events``."""
+    from scopus_spark.session import get_spark
+
+    spark = get_spark(app_name="profile", extra_conf={
+        "spark.ui.showConsoleProgress": "false",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + events,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    })
+    tracer = tracing.Tracer(True)
+    tracer.count_py4j()
+    records: dict[str, dict] = {}
+    try:
+        queries[WARMUP_KEY](spark, sf_dir).write.mode("overwrite").format(
+            "noop").save()
+        for key in keys:
+            walls, cpu0 = [], cpu_times()
+            try:
+                for i in range(repeat):
+                    rec = run_key(spark, tracer, queries[key], key, sf_dir,
+                                  f"{key}:{i}")
+                    walls.append(rec["wall_s"])
+            except Exception as e:  # recorded; the run goes on
+                traceback.print_exc()
+                msg = str(e).strip().splitlines()
+                records[key] = {"error": f"{type(e).__name__}: {msg[0][:300] if msg else ''}"}
+                print(f"{key}: ERROR {records[key]['error']}", flush=True)
+                continue
+            rec.update(wall_s=min(walls), steal_pct=steal_pct(cpu0, cpu_times()),
+                       load1=round(os.getloadavg()[0], 2))
+            records[key] = rec
+            print(f"{key}: {rec['wall_s']} s py4j={rec['queries.py4j_calls']} "
+                  f"steal={rec['steal_pct']}%", flush=True)
+        return records, spark.sparkContext.defaultParallelism
+    finally:
+        tracer.close()
+        spark.stop()  # flushes and closes the event log
+
+
+def profile(keys: list[str], sf_dir: str, repeat: int) -> dict:
+    from scopus_spark import registry
+    from scopus_spark._vendor import ensure_protobuf
+
+    queries = registry.all_queries()
+    missing = [k for k in keys if k not in queries]
+    if missing:
+        raise SystemExit(f"unknown keys {missing}")
+    # Python workers unpickle functions that reference the engine
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    ensure_protobuf()  # before the JVM: transformWithState keys need it
+    load_start, steal0 = os.getloadavg(), cpu_times()
+    events = tempfile.mkdtemp(prefix="scopus_profile_events_")
+    try:
+        records, spark_cores = run_keys(queries, keys, sf_dir, repeat, events)
+        counters = tracing.parse_event_log(events)
+    finally:
+        shutil.rmtree(events, ignore_errors=True)
+    for key, rec in records.items():
+        if "error" in rec:
+            continue
+        tag = f"{key}:{repeat - 1}"  # the last run's jobs
+        per_phase = [c for (op, _ph), c in counters.items() if op == tag]
+        rec["queries.eager_jobs"] = counters.get((tag, PHASE_BUILD), {}).get("jobs", 0)
+        for name, metric in EVENT_METRICS.items():
+            rec[metric] = sum(c[name] for c in per_phase)
+        rec["exec.task_cpu_ms"] = round(rec["exec.task_cpu_ms"], 1)
+    return {
+        "sf_dir": sf_dir, "repeat": repeat,
+        "cpus": len(os.sched_getaffinity(0)), "spark_cores": spark_cores,
+        "load_start": [round(x, 2) for x in load_start],
+        "load_end": [round(x, 2) for x in os.getloadavg()],
+        "steal_pct": steal_pct(steal0, cpu_times()),
+        "keys": records,
+    }
+
+
+def diff(a: dict, b: dict) -> dict[str, dict[str, list]]:
+    """Per key in both profiles: {metric: [A, B, B/A]} over the numeric
+    metrics both recorded (ratio None where A is 0)."""
+    out: dict[str, dict[str, list]] = {}
+    for key, ra in a["keys"].items():
+        rb = b["keys"].get(key)
+        if rb is None:
+            continue
+        out[key] = {
+            m: [va, rb[m], round(rb[m] / va, 3) if va else None]
+            for m, va in ra.items()
+            if isinstance(va, (int, float)) and isinstance(rb.get(m), (int, float))
+            and (va or rb[m])
+        }
+    return out
+
+
+def main(argv=None) -> int:
+    args = parse_args(argv)
+    if args.diff:
+        with open(args.diff[0]) as fa, open(args.diff[1]) as fb:
+            result = diff(json.load(fa), json.load(fb))
+        for key, metrics in result.items():
+            for m, (va, vb, ratio) in metrics.items():
+                print(f"{key:6s} {m:28s} {va:>14.6g} {vb:>14.6g} "
+                      f"{'-' if ratio is None else f'{ratio:.3f}x':>9s}")
+        failed = False
+    else:
+        from scopus_spark import registry
+
+        keys = [k.strip() for k in args.keys.split(",") if k.strip()] or list(
+            registry.all_queries())
+        result = profile(keys, args.sf_dir, args.repeat)
+        failed = any("error" in r for r in result["keys"].values())
+        print(f"load {result['load_start'][0]} -> {result['load_end'][0]}, "
+              f"steal {result['steal_pct']}%")
+    if args.out:
+        with open(args.out, "w") as fh:
+            json.dump(result, fh, indent=1)
+    return 1 if failed else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -1,9 +1,13 @@
-"""Scale-growth audit (round 10, VERDICT r9 next-round item 1).
+"""Scale-growth corpus (round 10, VERDICT r9 next-round item 1).
 
 Generates an sf1-shaped corpus (~10x sf0.1) by DETERMINISTIC
 replication of the driver's sf0.1 tables into a scratch dir — never
-touching /root/testdata — then measures the most expensive registry
-keys at both scales and reports per-key growth factors.
+touching the source corpus. Per-key growth is then two profiles and
+their diff:
+
+  python tools/profile.py --keys j53,j49 --out sf01.json
+  python tools/profile.py --keys j53,j49 --sf-dir <out> --out sf1.json
+  python tools/profile.py --diff sf01.json sf1.json
 
 Generation contract (factor N, copy i = 0..N-1):
 - every entity key shifts by i * (max_key + 1): copies are disjoint;
@@ -21,24 +25,15 @@ Generation contract (factor N, copy i = 0..N-1):
 - fact foreign keys (lineitem->orders/part/supplier, orders->customer,
   events->user) shift consistently; region/nation stay fixed dims.
 
-Measurement: each key runs once per scale through a `noop`-format
-write (forces full computation, no driver collect), after one shared
-warm-up query. Output: SCALE_r{round}.json with per-key seconds and
-growth = t_sf1 / t_sf0.1 (data factor = N), plus load averages.
-
 Usage:
   python tools/scale_audit.py gen  [--out /tmp/scopus_spark_scale/sf1] [--factor 10]
-  python tools/scale_audit.py run  [--sf1 /tmp/scopus_spark_scale/sf1] \\
-      [--keys j53,j49,...] [--json SCALE_r10.json]
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -46,10 +41,6 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DEFAULT_OUT = "/tmp/scopus_spark_scale/sf1"
-# PERF.md most-expensive order (r9)
-DEFAULT_KEYS = (
-    "j53,j49,a33,j2,j25,i17,a32,n2,j43,j24,a10,j57,d31,f4,o1"
-)
 
 
 def _spark() -> SparkSession:
@@ -219,60 +210,14 @@ def gen(out: str, factor: int) -> None:
     print(f"sf1 corpus at {out} (factor {factor})")
 
 
-def run(sf1_dir: str, keys: list[str], out_json: str) -> None:
-    from scopus_spark import registry
-
-    spark = _spark()
-    q = registry.all_queries()
-    missing = [k for k in keys if k not in q]
-    if missing:
-        raise SystemExit(f"unknown keys {missing}")
-    dirs = {"sf0.1": SRC, "sf1": sf1_dir}
-    # shared warm-up: one cheap full pass so JIT/codegen is hot
-    q[keys[-1]](spark, SRC).write.mode("overwrite").format("noop").save()
-    results: dict[str, dict] = {}
-    for k in keys:
-        rec: dict[str, float] = {}
-        for label, d in dirs.items():
-            t0 = time.perf_counter()
-            q[k](spark, d).write.mode("overwrite").format("noop").save()
-            rec[label] = round(time.perf_counter() - t0, 2)
-        rec["growth"] = (
-            round(rec["sf1"] / rec["sf0.1"], 2) if rec["sf0.1"] else None
-        )
-        results[k] = rec
-        print(f"{k}: sf0.1={rec['sf0.1']}s sf1={rec['sf1']}s "
-              f"growth={rec['growth']}x")
-    payload = {
-        "data_factor": 10,
-        "keys": results,
-        "load_end": round(os.getloadavg()[0], 2),
-        "note": (
-            "growth = t_sf1 / t_sf0.1 on a 10x corpus; <=10 is "
-            "at-most-linear in data volume (includes fixed overhead, "
-            "so typical linear keys land well under 10)"
-        ),
-    }
-    with open(out_json, "w") as fh:
-        json.dump(payload, fh, indent=1)
-    print(json.dumps(payload))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     sub = ap.add_subparsers(dest="cmd", required=True)
     g = sub.add_parser("gen")
     g.add_argument("--out", default=DEFAULT_OUT)
     g.add_argument("--factor", type=int, default=10)
-    r = sub.add_parser("run")
-    r.add_argument("--sf1", default=DEFAULT_OUT)
-    r.add_argument("--keys", default=DEFAULT_KEYS)
-    r.add_argument("--json", default="SCALE_r10.json")
     a = ap.parse_args()
-    if a.cmd == "gen":
-        gen(a.out, a.factor)
-    else:
-        run(a.sf1, [k.strip() for k in a.keys.split(",") if k.strip()], a.json)
+    gen(a.out, a.factor)
 
 
 if __name__ == "__main__":
