@@ -7,6 +7,13 @@ Two entry paths:
   session we did NOT build (the driver hands us one). All configs below are
   Spark *SQL* configs, which are runtime-settable; nothing here requires a
   restart.
+
+One static core conf is set by ``get_spark`` only, because ``configure``
+cannot set it on a running context: ``spark.python.daemon.module`` names
+``scopus_spark.pydaemon`` (stat-guarded zip importers, see that module).
+On a cluster set it only where ``scopus_spark`` is installed on the
+executors. Never with ``--py-files``: py-files reach a worker per task,
+after the daemon has started.
 """
 
 from __future__ import annotations
@@ -119,6 +126,17 @@ def get_spark(
     )
     for k, v in SQL_CONFS.items():
         builder = builder.config(k, v)
+    # Static confs (see the module docstring). Workers start as
+    # `python -m scopus_spark.pydaemon`, so the directory holding the
+    # package goes on their PYTHONPATH whatever the driver's cwd. Spark
+    # merges it with the JVM's own PYTHONPATH, which keeps the vendored
+    # protobuf entry that ensure_protobuf() exports.
+    builder = builder.config(
+        "spark.python.daemon.module", "scopus_spark.pydaemon"
+    ).config(
+        "spark.executorEnv.PYTHONPATH",
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
