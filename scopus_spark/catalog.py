@@ -15,6 +15,8 @@ asserted, no inference, partition-discovery friendly paths.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,19 +88,20 @@ def row_count_estimate(sf_dir: str, name: str) -> int:
 
 
 # Tracks which sf_dir each live session currently has registered, so repeated
-# queries() calls against the same dir skip re-registration.
-_REGISTERED: dict[int, str] = {}
+# queries() calls against the same dir skip re-registration. Weakly keyed by
+# the session object, not id(spark): CPython reuses the id of a collected
+# session, and a fresh session must never inherit its views' memo.
+_REGISTERED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def register_views(spark: SparkSession, sf_dir: str, force: bool = False) -> None:
     """Register all corpus tables as temp views named exactly as in FIXTURES.md."""
     configure(spark)  # driver-provided sessions lack C4 confs until now
-    key = id(spark)
-    if not force and _REGISTERED.get(key) == sf_dir:
+    if not force and _REGISTERED.get(spark) == sf_dir:
         return
     for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    _REGISTERED[key] = sf_dir
+    _REGISTERED[spark] = sf_dir
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

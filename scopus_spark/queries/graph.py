@@ -45,26 +45,18 @@ _PAIRS_CTE = f"""
 """
 
 
-# The edge pipeline (MinHash signatures + 60 nested SimHash folds per doc)
-# dominates each n-key's cost; n1-n3 share one persisted copy per
-# (session, sf_dir) — the realized edge list is tiny (pairs, not docs).
-# Keyed by applicationId, NOT id(spark): CPython reuses object ids after
-# garbage collection, so a stopped session's id could alias a fresh
-# session and serve a dead persisted DataFrame. applicationId is unique
-# per SparkContext lifetime.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Union of j9 + j11 pair signals as an (doc_a, doc_b) edge list."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        # r10: spread_scan — both pair signals run heavy per-doc map work
-        d = spread_scan(spark, sf_dir, "documents")
-        lsh = dedup.lsh_candidate_pairs(d).select("doc_a", "doc_b")
-        sim = dedup.simhash_near_pairs(d).select("doc_a", "doc_b")
-        _EDGE_CACHE[key] = lsh.union(sim).distinct().persist()
-    return _EDGE_CACHE[key]
+    """Union of j9 + j11 pair signals as an (doc_a, doc_b) edge list.
+
+    The pipeline (MinHash signatures + 60 nested SimHash folds per doc)
+    dominates each n-key's cost. It is built fresh on every call; a
+    consumer that reads the edges in more than one job pins them with
+    localCheckpoint(eager=False), which is freed with its frame."""
+    # r10: spread_scan — both pair signals run heavy per-doc map work
+    d = spread_scan(spark, sf_dir, "documents")
+    lsh = dedup.lsh_candidate_pairs(d).select("doc_a", "doc_b")
+    sim = dedup.simhash_near_pairs(d).select("doc_a", "doc_b")
+    return lsh.union(sim).distinct()
 
 
 # --- n1: dup-graph degree histogram ------------------------------------------------
@@ -186,7 +178,8 @@ def n4_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     level (operators/graph.py); the oracle's recursive CTE explores
     (node, hops) pairs and min-reduces — same answer, oracle-scale
     algorithm."""
-    edges = _dup_edges(spark, sf_dir)
+    # pinned: the seed probe and the BFS rounds are separate jobs
+    edges = _dup_edges(spark, sf_dir).localCheckpoint(eager=False)
     seed = edges.agg(F.min(F.least("doc_a", "doc_b"))).collect()[0][0]
     return graph.bfs_hops(edges, seed, "doc_a", "doc_b")
 
@@ -812,7 +805,8 @@ def n12_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     in all but transport."""
     from scopus_spark.operators.graph import coreness, degrees
 
-    edges = _dup_edges(spark, sf_dir).select(
+    # pinned: coreness peels in its own jobs, degrees reads them again
+    edges = _dup_edges(spark, sf_dir).localCheckpoint(eager=False).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     core = coreness(edges)

@@ -107,38 +107,28 @@ def j2_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_filter_pairs(d, threshold=_J2_SPARK_THRESHOLD)
 
 
-def _cosine(emb_a, emb_b):
-    """Cosine similarity of two double-array columns via higher-order fns
-    (JVM-side, no UDF)."""
-    dot = F.aggregate(
+def _dot(emb_a, emb_b):
+    return F.aggregate(
         F.zip_with(emb_a, emb_b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    norm = lambda e: F.sqrt(  # noqa: E731
+
+
+def _norm(e):
+    return F.sqrt(
         F.aggregate(F.transform(e, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
     )
-    return dot / (norm(emb_a) * norm(emb_b))
+
+
+def _cosine(emb_a, emb_b):
+    """Cosine similarity of two double-array columns via higher-order fns
+    (JVM-side, no UDF)."""
+    return _dot(emb_a, emb_b) / (_norm(emb_a) * _norm(emb_b))
 
 
 def _emb_double(col="embedding"):
     return F.transform(F.col(col), lambda x: x.cast("double"))
-
-
-# Keyed by (sf_dir, table mtime): a bare sf_dir key would serve a stale
-# vector if the underlying parquet were rewritten in-process.
-_J3_QUERY_VECTOR_CACHE: dict[tuple, list] = {}
-
-
-def _j3_cache_key(sf_dir: str) -> tuple:
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    return (sf_dir, mtime)
 
 
 # --- j3: exact top-10 cosine neighbors of vec_id=0 -----------------------------
@@ -163,24 +153,18 @@ def j3_vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by LSH bucket / IVF cell, then re-ranks with this exact cosine.
     """
     e = table(spark, sf_dir, "embeddings")
-    # One bounded query vector -> inline it as a literal array: removes the
-    # broadcast join entirely (constant-folded into the scan stage). Cached
-    # per sf_dir so repeat invocations skip the lookup job.
-    ck = _j3_cache_key(sf_dir)
-    if ck not in _J3_QUERY_VECTOR_CACHE:
-        _J3_QUERY_VECTOR_CACHE[ck] = (
-            e.filter(F.col("vec_id") == 0)
-            .select(_emb_double().alias("qe"))
-            .collect()[0]["qe"]
-        )
-    qvec = _J3_QUERY_VECTOR_CACHE[ck]
-    # Higher-order-fn cosine beats a fully unrolled element_at expression
-    # here: 64 dims x 3 terms unrolled blows the expression tree past what
-    # codegen handles gracefully (measured 4x slower at sf0.1).
-    qe = F.array(*[F.lit(float(x)) for x in qvec])
-    cos = F.round(_cosine(_emb_double(), qe), 6)
+    emb = _emb_double()
+    # The query vector and its norm come from a 1-row frame broadcast into
+    # the scan (the repo's bounded-crossJoin idiom): the lookup stays in
+    # the plan, so building the frame runs no job, and the norm is taken
+    # once, not per row. Same expression order as _cosine.
+    q = e.filter(F.col("vec_id") == 0).select(
+        emb.alias("qe"), _norm(emb).alias("qn")
+    )
+    cos = F.round(_dot(emb, F.col("qe")) / (_norm(emb) * F.col("qn")), 6)
     return (
         e.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
         .select("vec_id", "label", cos.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
         .limit(10)
@@ -446,29 +430,21 @@ def j41_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     C3), and integer products/sums have no ulp drift — so the oracle
     reproduces the candidate set bit-for-bit, not approximately.
 
-    Scale: the scale factor is a 1-row agg broadcast into the scan (the
-    repo's bounded-crossJoin idiom); quantization + integer dot are
-    map-side higher-order fns (no UDF, no shuffle); top-20 is a
+    Scale: the scale factor and the query vector are one 1-row agg
+    broadcast into the scan (the repo's bounded-crossJoin idiom);
+    quantization + integer dot are map-side higher-order fns (no UDF, no
+    shuffle); top-20 is a
     TakeOrdered (per-partition partial top-k, no global sort); the exact
     re-rank touches 20 rows. At 100 TB the int8 corpus is what lives in
     executor memory — the double corpus is read only by the re-rank's
     20-row fetch. Complements j3 (exact anchor), j17 (IVF recall tier),
     j31 (batched k-NN): this is the compressed-candidates tier."""
     e = table(spark, sf_dir, "embeddings")
-    ck = _j3_cache_key(sf_dir)
-    if ck not in _J3_QUERY_VECTOR_CACHE:
-        _J3_QUERY_VECTOR_CACHE[ck] = (
-            e.filter(F.col("vec_id") == 0)
-            .select(_emb_double().alias("qe"))
-            .collect()[0]["qe"]
-        )
-    qvec = _J3_QUERY_VECTOR_CACHE[ck]
-    qe = F.array(*[F.lit(float(x)) for x in qvec])
-
     scale = e.agg(
         F.max(
             F.array_max(F.transform(_emb_double(), lambda x: F.abs(x)))
-        ).alias("mx")
+        ).alias("mx"),
+        F.max(F.when(F.col("vec_id") == 0, _emb_double())).alias("qe"),
     )
 
     def _quant(arr):
@@ -483,8 +459,11 @@ def j41_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             _emb_double().alias("emb"),
+            "qe",
             F.aggregate(
-                F.zip_with(_quant(_emb_double()), _quant(qe), lambda a, b: a * b),
+                F.zip_with(
+                    _quant(_emb_double()), _quant(F.col("qe")), lambda a, b: a * b
+                ),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             ).alias("qdot"),
@@ -497,7 +476,7 @@ def j41_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "qdot",
-            F.round(_cosine(F.col("emb"), qe), 6).alias("cos_sim"),
+            F.round(_cosine(F.col("emb"), F.col("qe")), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
         .limit(10)

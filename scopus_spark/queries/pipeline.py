@@ -2410,27 +2410,18 @@ def j48_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- j49: NN-Descent approximate k-NN graph ------------------------------------------
-# j49 RETURNS this graph and j53 SEARCHES the identical graph (same
-# params); without sharing, the whole multi-round descent ran twice per
-# session (r10 measure: ~12 s each at sf0.1). Session-scoped share, the
-# graph.py _EDGE_CACHE pattern: keyed on (applicationId, sf_dir), pinned
-# with localCheckpoint so the second consumer re-reads, never re-descends.
-# Recomputed from parquet on every fresh process — no cross-run state.
-_NN_GRAPH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _nn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The NN-Descent graph j49 returns and j53 searches (same params),
+    built fresh on every call and pinned with localCheckpoint so each
+    consumer's readers re-read it, never re-descend."""
     from scopus_spark.catalog import row_count_estimate
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NN_GRAPH_CACHE:
-        # r10: spread_scan — descent scoring/init fan out from this scan
-        e = spread_scan(spark, sf_dir, "embeddings")
-        n = row_count_estimate(sf_dir, "embeddings")
-        _NN_GRAPH_CACHE[key] = similarity.nn_descent(
-            e, k=10, rounds=3, n_cells=similarity.auto_n_cells(n), n_rows=n
-        ).localCheckpoint(eager=False)
-    return _NN_GRAPH_CACHE[key]
+    # r10: spread_scan — descent scoring/init fan out from this scan
+    e = spread_scan(spark, sf_dir, "embeddings")
+    n = row_count_estimate(sf_dir, "embeddings")
+    return similarity.nn_descent(
+        e, k=10, rounds=3, n_cells=similarity.auto_n_cells(n), n_rows=n
+    ).localCheckpoint(eager=False)
 
 
 @register("j49")  # approximate by design: recall pinned in tests/test_nn_descent.py
