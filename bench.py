@@ -34,59 +34,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scopus_spark import registry  # noqa: E402
-from scopus_spark.catalog import (  # noqa: E402
-    TABLES,
-    _parquet_parts,
-    load_table,
-    register_views,
-)
+from scopus_spark.catalog import register_views  # noqa: E402
 from scopus_spark.session import get_spark  # noqa: E402
 
-
-def stage_splittable_corpus(spark, sf_dir: str, n_splits: int) -> str:
-    """Re-stage the bench tables as MULTI-FILE parquet (content identical,
-    layout splittable) and return the staged dir — r11, VERDICT r10 item 2.
-
-    Why: every sf0.1 corpus table is ONE parquet file with ONE row group,
-    so every scan is one task and the low-core/high-core bench ratio is
-    structurally ~1 ('suspect_cpus_ignored') — core scaling was
-    UNMEASURABLE, not absent. Staging each table as up to `n_splits`
-    files (floor: ~64 KB per file so tiny dims stay single-file) makes
-    the scan stage splittable, so the driver's cpus=8 rerun can actually
-    show the scaling it is trying to measure.
-
-    Measurement-validity notes (guide §1):
-      * content is bit-identical per table (a straight repartition
-        rewrite of the loaded table — no filters, no projections); every
-        declared query is partitioning-invariant (oracle-hash-checked
-        under varying core counts), so timed results are unchanged;
-      * staging runs BEFORE the warm-up pass and is excluded from
-        timings, exactly like session startup and view registration;
-      * the staged dir is fresh per invocation (pid temp dir, removed at
-        exit) — nothing persists across runs;
-      * `SPARK_GRAFT_BENCH_SPLITS=0` restores the previous single-file
-        layout bit-for-bit (OPTIMIZATION_r11.md records both numbers);
-      * n_splits is fixed (not derived from SPARK_GRAFT_CPUS) so the
-        32-core and 8-core runs read the SAME layout — a cpus-derived
-        layout would hide the very ratio being measured.
-    """
-    import atexit
-    import shutil
-    import tempfile
-
-    staged = tempfile.mkdtemp(prefix="scopus_bench_split_")
-    atexit.register(shutil.rmtree, staged, ignore_errors=True)
-    for t in TABLES:
-        src = f"{sf_dir}/{t}.parquet"
-        size = sum(os.path.getsize(p) for p in _parquet_parts(src))
-        n = max(1, min(n_splits, size // (64 << 10)))
-        (
-            load_table(spark, sf_dir, t)
-            .repartition(int(n))
-            .write.mode("overwrite")
-            .parquet(f"{staged}/{t}.parquet")
-        )
-    return staged
 
 # BASELINE.md metric name -> SURVEY §2 registry key
 HEADLINE: dict[str, str] = {
@@ -115,15 +65,9 @@ def main() -> None:
     # a run with load_start > 1 should be re-run, not compared
     load_start = os.getloadavg()[0]
     spark = get_spark(app_name="scopus_spark_bench")
-    # r11 (VERDICT r10 item 2): make core scaling measurable — stage the
-    # corpus as splittable multi-file parquet (content identical; see
-    # stage_splittable_corpus). Setup step, excluded from timings like
-    # view registration. SPARK_GRAFT_BENCH_SPLITS=0 restores the old
-    # single-file layout.
-    n_splits = int(os.environ.get("SPARK_GRAFT_BENCH_SPLITS", "32"))
-    if n_splits > 1:
-        sf_dir = stage_splittable_corpus(spark, sf_dir, n_splits)
-    register_views(spark, sf_dir)  # excluded from timings, as in BASELINE.md
+    # excluded from timings, as in BASELINE.md; one-row-group tables are
+    # registered over their split layout (catalog.split_layout)
+    register_views(spark, sf_dir)
 
     queries = registry.all_queries()
     plan = [(n, queries[k]) for n, k in HEADLINE.items() if k in queries]
@@ -154,10 +98,10 @@ def main() -> None:
             "value_min": round(sum(timings_min.values()), 4),
             "queries_min": timings_min,
             "sf": sf,
-            # r11: echo the session's real core count + staged layout so
-            # the scaling artifact is self-describing (VERDICT r10 item 2)
+            # the session's core count and the registered lineitem file
+            # count, so a scaling artifact is self-describing
             "cpus": spark.sparkContext.defaultParallelism,
-            "bench_splits": n_splits,
+            "bench_splits": len(spark.table("lineitem").inputFiles()),
             # load at session start / after the timed runs; "loaded"
             # flags a co-tenant-noisy artifact (don't grade it raw)
             "load_start": round(load_start, 2),

@@ -240,36 +240,33 @@ def label_propagation(
     production runs cap rounds anyway."""
     from pyspark.sql.window import Window
 
-    und = undirected(edges, src, dst).persist()
+    und = undirected(edges, src, dst)
     labels = und.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     pick_w = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label")
     )
-    try:
-        for _rd in range(rounds):
-            cand = (
-                und.join(labels, und.dst == labels.node)
-                .groupBy(F.col("src").alias("node"), "label")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            labels = (
-                cand.withColumn("rn", F.row_number().over(pick_w))
-                .filter(F.col("rn") == 1)
-                .select("node", "label")
-            )
-            # same cadence rationale as pagerank (r10): fixed small
-            # round counts never need a mid-loop lineage cut.
-            if (
-                checkpoint_every
-                and (_rd + 1) % checkpoint_every == 0
-                and (_rd + 1) < rounds
-            ):
-                labels = labels.localCheckpoint(eager=False)
-        return labels.select("node", F.col("label").alias("community"))
-    finally:
-        und.unpersist()
+    for _rd in range(rounds):
+        cand = (
+            und.join(labels, und.dst == labels.node)
+            .groupBy(F.col("src").alias("node"), "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        labels = (
+            cand.withColumn("rn", F.row_number().over(pick_w))
+            .filter(F.col("rn") == 1)
+            .select("node", "label")
+        )
+        # same cadence rationale as pagerank (r10): fixed small
+        # round counts never need a mid-loop lineage cut.
+        if (
+            checkpoint_every
+            and (_rd + 1) % checkpoint_every == 0
+            and (_rd + 1) < rounds
+        ):
+            labels = labels.localCheckpoint(eager=False)
+    return labels.select("node", F.col("label").alias("community"))
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

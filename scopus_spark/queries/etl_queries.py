@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from scopus_spark import etl
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
-
-STAGE_ROOT = "/tmp/scopus_spark_stage"
+from scopus_spark.session import STAGE_ROOT
 
 _EXTRACTED: dict[str, str] = {}
 

@@ -19,6 +19,7 @@ from scopus_spark.catalog import spread_scan, table
 from scopus_spark.operators import dedup, multimodal, similarity
 from scopus_spark.operators.text import LANG_MARKERS, char_shingles, lang_score, tokens
 from scopus_spark.registry import register
+from scopus_spark.session import STAGE_ROOT
 
 
 # --- j9: MinHash-LSH candidate pairs ------------------------------------------
@@ -879,7 +880,7 @@ def j25_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     target = os.path.join(
-        "/tmp/scopus_spark_stage",
+        STAGE_ROOT,
         os.path.basename(sf_dir.rstrip("/")),
         f"pid{os.getpid()}",
         "j25_bands",
@@ -1109,7 +1110,7 @@ def j28_incremental_1nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = e.filter(bucket >= 90)
 
     root = os.path.join(
-        "/tmp/scopus_spark_stage",
+        STAGE_ROOT,
         os.path.basename(sf_dir.rstrip("/")),
         f"pid{os.getpid()}",
         "j28_ivf",

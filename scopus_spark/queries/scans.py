@@ -21,8 +21,7 @@ from pyspark.sql import types as T
 
 from scopus_spark.catalog import load_table, table
 from scopus_spark.registry import register
-
-STAGE_ROOT = "/tmp/scopus_spark_stage"
+from scopus_spark.session import STAGE_ROOT
 
 
 def _stage(sf_dir: str, name: str) -> str:

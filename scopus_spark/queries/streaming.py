@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from scopus_spark.catalog import table
 from scopus_spark.queries import _fp
 from scopus_spark.registry import register
+from scopus_spark.session import STAGE_ROOT
 
 
 # Builder functions take an events-shaped DataFrame so the SAME logic runs
@@ -582,7 +583,7 @@ def i14_versioned_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1, b2 = int(cuts.c1), int(cuts.c2)
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     target = os.path.join(
-        "/tmp/scopus_spark_stage",
+        STAGE_ROOT,
         os.path.basename(sf_dir.rstrip("/")),
         f"pid{os.getpid()}",
         "i14_cdc",

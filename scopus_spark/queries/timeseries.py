@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
+from scopus_spark.session import STAGE_ROOT
 
 # One row per (user, µs ts): latest event_id wins. The oracle mirrors the
 # G1 ns->µs truncation explicitly (make_timestamp(epoch_us(...))).
@@ -298,7 +299,7 @@ def o4_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     target = os.path.join(
-        "/tmp/scopus_spark_stage",
+        STAGE_ROOT,
         os.path.basename(sf_dir.rstrip("/")),
         f"pid{os.getpid()}",
         "o4_rollup",

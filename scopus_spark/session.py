@@ -8,12 +8,16 @@ Two entry paths:
   Spark *SQL* configs, which are runtime-settable; nothing here requires a
   restart.
 
-One static core conf is set by ``get_spark`` only, because ``configure``
-cannot set it on a running context: ``spark.python.daemon.module`` names
-``scopus_spark.pydaemon`` (stat-guarded zip importers, see that module).
-On a cluster set it only where ``scopus_spark`` is installed on the
-executors. Never with ``--py-files``: py-files reach a worker per task,
-after the daemon has started.
+Two static confs are set by ``get_spark`` only, because ``configure``
+cannot set them on a running context:
+
+- ``spark.python.daemon.module`` names ``scopus_spark.pydaemon``
+  (stat-guarded zip importers, see that module). On a cluster set it
+  only where ``scopus_spark`` is installed on the executors. Never with
+  ``--py-files``: py-files reach a worker per task, after the daemon
+  has started.
+- ``spark.sql.codegen.cache.maxEntries`` (``CODEGEN_CACHE_ENTRIES``)
+  sizes the generated-class cache to the engine's working set.
 """
 
 from __future__ import annotations
@@ -53,6 +57,13 @@ SQL_CONFS: dict[str, str] = {
     ),
 }
 
+
+# Spark's compiled-class cache holds 100 classes by default, and the 10
+# headline keys alone generate 100, so every pass recompiled about half
+# of them (0.4-0.6 s of Janino time per pass at sf0.1) and dropped their
+# JIT-compiled code. One tools/profile.py sweep of the whole registry
+# compiles 3,652 distinct classes; the cache holds them with headroom.
+CODEGEN_CACHE_ENTRIES = 4096
 
 STAGE_ROOT = "/tmp/scopus_spark_stage"
 _SWEPT = False
@@ -131,11 +142,13 @@ def get_spark(
     # package goes on their PYTHONPATH whatever the driver's cwd. Spark
     # merges it with the JVM's own PYTHONPATH, which keeps the vendored
     # protobuf entry that ensure_protobuf() exports.
-    builder = builder.config(
-        "spark.python.daemon.module", "scopus_spark.pydaemon"
-    ).config(
-        "spark.executorEnv.PYTHONPATH",
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    builder = (
+        builder.config("spark.python.daemon.module", "scopus_spark.pydaemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -27,3 +27,22 @@ def test_dead_pid_dirs_removed_live_kept(tmp_path):
 
 def test_missing_root_is_noop(tmp_path):
     assert sweep_stale_stage_dirs(str(tmp_path / "absent")) == []
+
+
+def test_split_stage_dirs_are_swept(tmp_path, monkeypatch):
+    """catalog.split_layout stages under <root>/<sf>/split<par>_pid<N>,
+    a name the sweep reclaims once its process is dead."""
+    from scopus_spark import catalog
+    from tests.conftest import TEST_SF_DIR
+
+    root = tmp_path / "stage"
+    monkeypatch.setattr(catalog, "STAGE_ROOT", str(root))
+    sf = root / os.path.basename(TEST_SF_DIR)
+    staged = catalog.split_layout(TEST_SF_DIR, "lineitem", 2, floor=1)
+    mine = os.path.dirname(staged)
+    assert mine == str(sf / f"split2_pid{os.getpid()}")
+    dead = sf / f"split2_pid{2 ** 22 + 12345}"
+    os.rename(mine, dead)  # as a dead process would have left it
+    catalog.split_layout(TEST_SF_DIR, "lineitem", 2, floor=1)
+    assert sweep_stale_stage_dirs(str(root)) == [str(dead)]
+    assert os.listdir(sf) == [f"split2_pid{os.getpid()}"]

@@ -24,7 +24,12 @@ run the profile takes, with perfbench's tracing (``perfbench/tracing.py``):
   and the Python-worker bytes and stage time. These count every job the
   key ran; ``queries.eager_jobs`` says how many ran during the build
   (n6's build runs jobs);
-- ``exec.persisted_rdds_after``: persisted RDDs alive after the write.
+- ``exec.persisted_rdds_after``: persisted RDDs alive after the write;
+- ``codegen.classes_compiled``: generated classes Janino compiled for
+  the key (cache misses of Spark's compiled-class cache). The record's
+  top-level ``codegen.classes_compiled`` counts the whole run, warm-up
+  included: the distinct classes the keys generate, while the cache
+  (``session.CODEGEN_CACHE_ENTRIES``) holds them all.
 
 Keys run in the order given, by default every registry key in registry
 order. Family-staged keys (a10-a12 ZIP corpus, table-layer keys, i16/i17
@@ -106,9 +111,16 @@ def steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
     return round(100.0 * (after[0] - before[0]) / total, 2) if total else 0.0
 
 
+def classes_compiled(spark) -> int:
+    """Generated classes compiled in this JVM so far."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
 def run_key(spark, tracer, fn, key: str, sf_dir: str, tag: str) -> dict:
     """One build + explain + noop write of ``key``, its jobs tagged ``tag``."""
     sc = spark.sparkContext
+    compiled0 = classes_compiled(spark)
     sc.setJobDescription(f"profile:{key}")
     sc.setLocalProperty(tracing.OP_PROP, tag)
     sc.setLocalProperty(tracing.PHASE_PROP, PHASE_BUILD)
@@ -135,13 +147,15 @@ def run_key(spark, tracer, fn, key: str, sf_dir: str, tag: str) -> dict:
         **{f"catalyst.{p}_ms": ms for p, ms in sorted(phases.items())},
         "exec.noop_write_ms": round(write_s * 1e3, 1),
         "exec.persisted_rdds_after": sc._jsc.getPersistentRDDs().size(),
+        "codegen.classes_compiled": classes_compiled(spark) - compiled0,
         "plan": plan,
     }
 
 
-def run_keys(queries, keys, sf_dir, repeat, events) -> tuple[dict, int]:
-    """Each key's record (event-log counters still to add) and the
-    session's cores; the session logs its events to ``events``."""
+def run_keys(queries, keys, sf_dir, repeat, events) -> tuple[dict, int, int]:
+    """Each key's record (event-log counters still to add), the
+    session's cores and the classes the run compiled; the session logs
+    its events to ``events``."""
     from scopus_spark.session import get_spark
 
     spark = get_spark(app_name="profile", extra_conf={
@@ -175,7 +189,8 @@ def run_keys(queries, keys, sf_dir, repeat, events) -> tuple[dict, int]:
             records[key] = rec
             print(f"{key}: {rec['wall_s']} s py4j={rec['queries.py4j_calls']} "
                   f"steal={rec['steal_pct']}%", flush=True)
-        return records, spark.sparkContext.defaultParallelism
+        return (records, spark.sparkContext.defaultParallelism,
+                classes_compiled(spark))
     finally:
         tracer.close()
         spark.stop()  # flushes and closes the event log
@@ -196,7 +211,8 @@ def profile(keys: list[str], sf_dir: str, repeat: int) -> dict:
     load_start, steal0 = os.getloadavg(), cpu_times()
     events = tempfile.mkdtemp(prefix="scopus_profile_events_")
     try:
-        records, spark_cores = run_keys(queries, keys, sf_dir, repeat, events)
+        records, spark_cores, compiled = run_keys(
+            queries, keys, sf_dir, repeat, events)
         counters = tracing.parse_event_log(events)
     finally:
         shutil.rmtree(events, ignore_errors=True)
@@ -215,6 +231,7 @@ def profile(keys: list[str], sf_dir: str, repeat: int) -> dict:
         "load_start": [round(x, 2) for x in load_start],
         "load_end": [round(x, 2) for x in os.getloadavg()],
         "steal_pct": steal_pct(steal0, cpu_times()),
+        "codegen.classes_compiled": compiled,
         "keys": records,
     }
 
