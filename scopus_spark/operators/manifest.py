@@ -12,9 +12,10 @@ an atomic metadata pointer, and that is exactly the shape here:
 - A manifest (``root/_manifests/v%06d.json``) lists the EXACT data
   directories of one snapshot, per partition value, plus the schema.
 - Commit = write the next manifest file, then atomically swap the
-  ``root/_current`` pointer (``os.replace`` — POSIX-atomic). Readers
-  resolve the pointer ONCE and from then on see precisely that
-  snapshot's files, no matter how many commits land meanwhile.
+  ``root/_current`` pointer (``os.replace`` — POSIX-atomic; both are
+  ``tablefs.write_atomic``). Readers resolve the pointer ONCE and from
+  then on see precisely that snapshot's files, no matter how many
+  commits land meanwhile.
 - Old snapshots stay readable until an explicit ``vacuum`` drops the
   manifests and any data directories only they reference.
 
@@ -65,6 +66,43 @@ compare-and-swap (conditional-put), and the rebase/conflict logic
 transfers verbatim — everything else (immutable files, manifest
 pruning by partition value, snapshot-pinned readers) is already the
 at-scale shape.
+
+FILESYSTEM STEPS: every mutation goes through ``operators/tablefs.py``
+with a step name; its ``step`` hook lets a test record the sequence or
+fail at any one step. Each operation's steps in order, ``*`` marking
+the commit point (a crash before it leaves the old snapshot current,
+after it the new one):
+
+=========================  ===============================================
+write_initial, append,     data.write, manifest.mkdir, manifest.write,
+merge, delete_keys,        pointer.replace*
+compact
+merge, mixed-spec table    data.write (rewrite), data.write (legacy
+                           tombstones), manifest.mkdir, manifest.write,
+                           pointer.replace*
+evolve_partitioning,       manifest.mkdir, manifest.write, pointer.replace*
+merge_branch
+stage_append               data.write, staged.write
+publish_staged             manifest.mkdir, manifest.write, pointer.replace*,
+                           staged.remove
+discard_staged, a          staged.remove, then data.discard per commit dir
+replayed publish           no committed manifest lists
+create_branch              branch.mkdir, branch.base, manifest.mkdir,
+                           manifest.write, pointer.replace* (the branch's)
+drop_branch                branch.remove, then data.discard per reclaimed
+                           commit dir
+vacuum                     per dropped manifest: vacuum.data (and
+                           vacuum.shell once a commit dir is empty) per
+                           unreferenced dir, then vacuum.manifest
+a replay or conflict       data.discard of the commit's own data dir
+after data.write
+upsert_partitioned         data.write, then per touched partition
+(operators/upsert.py)      swap.park, swap.move, swap.unpark, then
+                           staging.remove; its recovery sweep runs
+                           recover.unpark or recover.drop per parked dir
+stream version marker      marker.mkdir, marker.write
+(streaming/table_source)
+=========================  ===============================================
 """
 
 from __future__ import annotations
@@ -73,12 +111,14 @@ import fcntl
 import json
 import os
 import re
-import shutil
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from scopus_spark.operators import tablefs
 
 _PART_DIR = "__part"
 # deletion-vector column: the data directories a tombstone row applies to
@@ -232,6 +272,139 @@ def _filter_dirs(
                 kept.append(d)
         dirs = kept
     return dirs
+
+
+# The table state a commit carries forward from its parent unless it
+# changes it, with the default every reader's .get assumes. Per-op fields
+# (key_cols, replaced, applies, staged_id, branch_base, ...) describe one
+# commit and are never carried.
+_CARRIED = {
+    "partition_col": None,
+    "schema": None,
+    "partitions": None,
+    "legacy_dirs": [],
+    "legacy_specs": [],
+    "tombstones": {},
+    "tombstone_key_cols": None,
+    "stats_cols": [],
+    "stats": {},
+    "file_stats": {},
+    "bloom_cols": [],
+    "blooms": {},
+    "tokens": [],
+}
+
+
+def _replayed(m: dict, commit_token: str | None) -> bool:
+    """True when ``commit_token`` already committed (exactly-once replay)."""
+    return commit_token is not None and commit_token in m.get("tokens", [])
+
+
+def _successor(
+    latest: dict, op: str, commit_token: str | None = None, **fields
+) -> dict:
+    """The manifest after ``latest``: its table state carried forward,
+    ``commit_token`` pushed into the bounded replay window, then the
+    fields this ``op`` sets."""
+    m = {"version": latest["version"] + 1, "parent": latest["version"], "op": op}
+    m.update((k, latest.get(k, d)) for k, d in _CARRIED.items())
+    if commit_token is not None:
+        m["tokens"] = (list(m["tokens"]) + [commit_token])[-_TOKEN_WINDOW:]
+    m.update(fields)
+    return m
+
+
+def _live_metadata(live: set[str], *sources: dict) -> dict:
+    """stats, blooms and file_stats of ``sources`` (a later source wins)
+    restricted to the ``live`` data dirs."""
+    return {
+        "stats": {
+            d: s
+            for src in sources
+            for d, s in src.get("stats", {}).items()
+            if d in live
+        },
+        "blooms": {
+            d: b
+            for src in sources
+            for d, b in src.get("blooms", {}).items()
+            if d in live
+        },
+        "file_stats": {
+            rel: st
+            for src in sources
+            for rel, st in src.get("file_stats", {}).items()
+            if os.path.dirname(rel) in live
+        },
+    }
+
+
+def _dirs_of(m: dict) -> Iterator[str]:
+    """The data dirs a manifest (or staged record) keeps live: its
+    partitions' dirs, its tombstone dirs (a retained snapshot's
+    merge-on-read needs them) and its legacy (retired-spec) dirs, which
+    are live data until a full compact migrates them."""
+    for ds in m["partitions"].values():
+        yield from ds
+    for ds in m.get("tombstones", {}).values():
+        yield from ds
+    yield from m.get("legacy_dirs", [])
+
+
+def _commit_id(rel_dir: str) -> str:
+    """The <commit> of a relative data/<commit>/... dir."""
+    return rel_dir.split(os.sep)[1]
+
+
+def _listed(mdir: str, prefix: str = "v") -> Iterator[tuple[str, dict]]:
+    """(name, record) of every committed manifest (``v*.json``) or, with
+    ``prefix="staged-"``, every staged record in one manifest dir, by
+    name. Temp files of a crashed write (``*.tmp-*``) are skipped: only
+    fsync'd, replaced files count."""
+    for name in sorted(os.listdir(mdir)):
+        if name.startswith(prefix) and name.endswith(".json"):
+            with open(os.path.join(mdir, name)) as fh:
+                yield name, json.load(fh)
+
+
+def _append_fold(
+    latest: dict, batch: dict, commit_token: str | None, retry: str, **fields
+) -> dict:
+    """append and publish_staged: the manifest that rebases a ``batch``
+    (its ``schema`` and ``partition_col`` as written, the ``added`` dirs
+    and their skipping metadata) onto ``latest``, concatenating its dirs
+    and metadata. Appends commute with every commit except a schema or
+    partition-spec change, which would make the batch's files read NULL
+    or sit under the old spec: those raise CommitConflict. Tombstones
+    carry forward untouched: they are scoped to the dirs they were
+    committed against, and an append never replaces a dir."""
+    if latest["schema"] != batch["schema"]:
+        raise CommitConflict(
+            "schema changed since this batch was written; its files were "
+            f"validated against the old schema — {retry}"
+        )
+    if latest["partition_col"] != batch["partition_col"]:
+        raise CommitConflict(
+            "partitioning evolved since this batch was written "
+            f"({batch['partition_col']!r} -> {latest['partition_col']!r}); "
+            f"its files are laid out under the old spec — {retry}"
+        )
+    parts = {k: list(v) for k, v in latest["partitions"].items()}
+    for key, dirs in batch["added"].items():
+        parts.setdefault(key, []).extend(dirs)
+    return _successor(
+        latest,
+        "append",
+        commit_token,
+        partitions=parts,
+        touched=sorted(batch["added"]),
+        added=batch["added"],
+        **{
+            k: {**latest.get(k, {}), **batch.get(k, {})}
+            for k in ("stats", "blooms", "file_stats")
+        },
+        **fields,
+    )
 
 
 class _WriterLock:
@@ -422,22 +595,16 @@ class VersionedTable:
 
     def _commit(self, manifest: dict) -> int:
         """Write the manifest file, then atomically swap the pointer."""
-        os.makedirs(self._manifest_dir, exist_ok=True)
+        tablefs.makedirs(self._manifest_dir, "manifest.mkdir")
         version = manifest["version"]
         name = f"v{version:06d}.json"
-        path = os.path.join(self._manifest_dir, name)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path)
-        ptmp = f"{self._pointer}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(ptmp, "w") as fh:
-            fh.write(name)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ptmp, self._pointer)  # THE commit point (atomic)
+        tablefs.write_atomic(
+            os.path.join(self._manifest_dir, name),
+            json.dumps(manifest),
+            "manifest.write",
+        )
+        # THE commit point (atomic)
+        tablefs.write_atomic(self._pointer, name, "pointer.replace")
         return version
 
     # -- data ----------------------------------------------------------------
@@ -451,7 +618,7 @@ class VersionedTable:
         would permanently leak a full rewrite of its touched
         partitions with no GC path (vacuum only reclaims dirs dropped
         manifests reference)."""
-        shutil.rmtree(commit_dir, ignore_errors=True)
+        tablefs.rmtree(commit_dir, "data.discard", ignore_errors=True)
 
     def _swap_or_reclaim(
         self, commit_dir: str, expected_version: int, manifest: dict
@@ -475,18 +642,14 @@ class VersionedTable:
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         cluster: bool = True,
-    ) -> tuple[
-        dict[str, list[str]],
-        dict[str, dict[str, list]],
-        dict[str, dict[str, list[int]]],
-        dict[str, dict[str, list[list]]],
-        str,
-    ]:
+    ) -> tuple[dict[str, list[str]], dict, str]:
         """Write df as immutable files under data/<commit>/ and return
         ({partition value (as dir string): [relative data dirs]},
-        {relative data dir: {stat col: [min, max]}},
-        {relative data dir: {bloom col: [16 int64 filter words]}},
-        the absolute commit directory — so conflict paths can reclaim it).
+        the skipping metadata ``{"stats": {relative data dir: {stat col:
+        [min, max]}}, "blooms": {relative data dir: {bloom col: [16 int64
+        filter words]}}, "file_stats": {relative file: {stat col: [[min,
+        max] per row group]}}}``, the absolute commit directory — so
+        conflict paths can reclaim it).
 
         With ``stats_cols``, per-directory min/max for those columns is
         FOLDED FROM THE PARQUET FOOTERS of the files just written (the
@@ -534,6 +697,7 @@ class VersionedTable:
             # declared file layout (a39's range-sliced staging) pass
             # cluster=False.
             staged = staged.repartition(F.col(_PART_DIR))
+        tablefs.step("data.write")
         (
             staged.write.option("maxRecordsPerFile", COMMIT_FILE_ROWS)
             .partitionBy(_PART_DIR)
@@ -547,7 +711,7 @@ class VersionedTable:
                     os.path.join("data", commit_id, name)
                 ]
         if _LEGACY_KEY in out:
-            shutil.rmtree(commit_dir, ignore_errors=True)
+            self._discard_commit_dir(commit_dir)
             raise ValueError(
                 f"partition value {_LEGACY_KEY!r} is reserved (it keys "
                 "retired-spec tombstones in the manifest)"
@@ -635,21 +799,20 @@ class VersionedTable:
                         ]
                         for ci, c in enumerate(bloom_cols)
                     }
-        return out, stats, blooms, fstats, commit_dir
+        meta = {"stats": stats, "blooms": blooms, "file_stats": fstats}
+        return out, meta, commit_dir
 
-    @staticmethod
-    def _carry_file_stats(
-        old: dict, live_dirs: set[str], new: dict
-    ) -> dict:
-        """Carry per-file row-group stats for files whose directory is
-        still live, plus the commit's own new entries."""
-        out = {
-            rel: st
-            for rel, st in old.items()
-            if os.path.dirname(rel) in live_dirs
-        }
-        out.update(new)
-        return out
+    def _write_table_data(
+        self, df: DataFrame, m: dict
+    ) -> tuple[dict[str, list[str]], dict, str]:
+        """``_write_commit_data`` under the table's layout and skipping
+        properties as manifest ``m`` records them."""
+        return self._write_commit_data(
+            df,
+            m["partition_col"],
+            m.get("stats_cols") or None,
+            m.get("bloom_cols") or None,
+        )
 
     def _footer_rowgroup_stats(
         self, spark: SparkSession, rel_files: list[str], cols: list[str]
@@ -725,40 +888,53 @@ class VersionedTable:
         replayed create-batch (streaming retry of batch 0) is
         recognized by the append/merge that follows."""
         _check_partition_type(df.schema, partition_col)
-        parts, stats, blooms, fstats, commit_dir = self._write_commit_data(
+        return self._create(
+            df, partition_col, commit_token, stats_cols, bloom_cols, cluster
+        )
+
+    def _create(
+        self,
+        df: DataFrame,
+        partition_col: str,
+        commit_token: str | None,
+        stats_cols: list[str] | None = None,
+        bloom_cols: list[str] | None = None,
+        cluster: bool = True,
+        **fields,
+    ) -> int:
+        """Commit snapshot v1 from df (write_initial, and merge() on a
+        missing table); a creator that loses the race reclaims its data
+        and raises CommitConflict."""
+        parts, meta, commit_dir = self._write_commit_data(
             df, partition_col, stats_cols, bloom_cols, cluster=cluster
         )
         with self.coordinator.exclusive(self):
-            try:
-                if self.exists():
-                    raise CommitConflict(
-                        f"table already exists at {self.root}; "
-                        "write_initial raced another creator — read the "
-                        "current snapshot and append/merge instead"
-                    )
-                return self.coordinator.swap_or_conflict(
-                    self,
-                    {
-                        "version": 1,
-                        "parent": 0,
-                        "op": "create",
-                        "partition_col": partition_col,
-                        "schema": df.schema.json(),
-                        "partitions": parts,
-                        "touched": sorted(parts),
-                        "added": parts,
-                        "stats_cols": list(stats_cols or []),
-                        "stats": stats,
-                        "file_stats": fstats,
-                        "bloom_cols": list(bloom_cols or []),
-                        "blooms": blooms,
-                        "tokens": [commit_token] if commit_token else [],
-                    },
-                    expected_version=0,
-                )
-            except CommitConflict:
+            if self.exists():
                 self._discard_commit_dir(commit_dir)
-                raise
+                raise CommitConflict(
+                    f"table already exists at {self.root}; another "
+                    "creator won the race — re-run against the current "
+                    "snapshot (append/merge)"
+                )
+            return self._swap_or_reclaim(
+                commit_dir,
+                0,
+                {
+                    "version": 1,
+                    "parent": 0,
+                    "op": "create",
+                    "partition_col": partition_col,
+                    "schema": df.schema.json(),
+                    "partitions": parts,
+                    "touched": sorted(parts),
+                    "added": parts,
+                    "stats_cols": list(stats_cols or []),
+                    "bloom_cols": list(bloom_cols or []),
+                    "tokens": [commit_token] if commit_token else [],
+                    **meta,
+                    **fields,
+                },
+            )
 
     def data_dirs(
         self,
@@ -1065,27 +1241,18 @@ class VersionedTable:
         key counts, directories added, whether the commit carried an
         exactly-once token. Metadata-only (reads manifests, never data
         files); vacuumed versions no longer appear."""
-        rows = []
-        if self.exists():
-            names = sorted(
-                n
-                for n in os.listdir(self._manifest_dir)
-                if n.endswith(".json") and n.startswith("v")
+        rows = [
+            (
+                m["version"],
+                m.get("parent", m["version"] - 1),
+                m.get("op", "unknown"),
+                len(m.get("touched", [])),
+                len(m["partitions"]),
+                sum(len(ds) for ds in m.get("added", {}).values()),
+                bool(m.get("tokens")),
             )
-            for name in names:
-                with open(os.path.join(self._manifest_dir, name)) as fh:
-                    m = json.load(fh)
-                rows.append(
-                    (
-                        m["version"],
-                        m.get("parent", m["version"] - 1),
-                        m.get("op", "unknown"),
-                        len(m.get("touched", [])),
-                        len(m["partitions"]),
-                        sum(len(ds) for ds in m.get("added", {}).values()),
-                        bool(m.get("tokens")),
-                    )
-                )
+            for _, m in (_listed(self._manifest_dir) if self.exists() else ())
+        ]
         return spark.createDataFrame(
             rows,
             "version long, parent long, op string, n_touched int, "
@@ -1420,100 +1587,60 @@ class VersionedTable:
         refusal is a concurrent schema change, which would make this
         batch's files silently NULL-read — that raises CommitConflict.
         """
-        if not self.exists():
-            raise ValueError("append() needs an existing table; "
-                             "use write_initial() first")
-        m = self._read_manifest()
-        if commit_token is not None and commit_token in m.get("tokens", []):
+        m = self._append_base(df, "append()", commit_token)
+        if _replayed(m, commit_token):
             return m["version"]
-        # strict column contract: a silently mismatched append would
-        # write files the manifest schema reads back as NULLs
-        want = {
-            f.name: f.dataType
-            for f in StructType.fromJson(json.loads(m["schema"])).fields
-        }
-        got = {f.name: f.dataType for f in df.schema.fields}
-        if got.keys() != want.keys() or any(
-            got[n] != want[n] for n in want
-        ):
-            raise ValueError(
-                "append() batch schema does not match the table schema "
-                f"(want {sorted(want)}, got {sorted(got)}); appends are "
-                "schema-strict — evolve via merge(allow_schema_evolution"
-                "=True) first"
-            )
-        new_parts, new_stats, new_blooms, new_fstats, commit_dir = (
-            self._write_commit_data(
-                df,
-                m["partition_col"],
-                m.get("stats_cols") or None,
-                m.get("bloom_cols") or None,
-            )
-        )
+        new_parts, meta, commit_dir = self._write_table_data(df, m)
         with self.coordinator.exclusive(self):
             latest = self._read_manifest()
-            if commit_token is not None and commit_token in latest.get(
-                "tokens", []
-            ):
+            if _replayed(latest, commit_token):
                 # replayed batch raced us between the pre-check and the
                 # lock: its data landed under the ORIGINAL commit's dirs;
                 # ours are a redundant copy no manifest will ever list
                 self._discard_commit_dir(commit_dir)
                 return latest["version"]
-            if latest["schema"] != m["schema"]:
+            batch = {
+                "schema": m["schema"],
+                "partition_col": m["partition_col"],
+                "added": new_parts,
+                **meta,
+            }
+            try:
+                manifest = _append_fold(latest, batch, commit_token, "re-run")
+            except CommitConflict:
                 self._discard_commit_dir(commit_dir)
-                raise CommitConflict(
-                    "schema changed concurrently; this append's files "
-                    "were validated against the old schema — re-run"
-                )
-            if latest["partition_col"] != m["partition_col"]:
-                self._discard_commit_dir(commit_dir)
-                raise CommitConflict(
-                    "partitioning evolved concurrently "
-                    f"({m['partition_col']!r} -> "
-                    f"{latest['partition_col']!r}); this append's files "
-                    "are laid out under the old spec — re-run"
-                )
-            parts = {k: list(v) for k, v in latest["partitions"].items()}
-            for key, dirs in new_parts.items():
-                parts.setdefault(key, []).extend(dirs)
-            stats = dict(latest.get("stats", {}))
-            stats.update(new_stats)
-            blooms = dict(latest.get("blooms", {}))
-            blooms.update(new_blooms)
-            tokens = list(latest.get("tokens", []))
-            if commit_token is not None:
-                tokens = (tokens + [commit_token])[-_TOKEN_WINDOW:]
+                raise
             return self._swap_or_reclaim(
-                commit_dir,
-                latest["version"],
-                {
-                    "version": latest["version"] + 1,
-                    "parent": latest["version"],
-                    "op": "append",
-                    "partition_col": latest["partition_col"],
-                    "schema": latest["schema"],
-                    "partitions": parts,
-                    "touched": sorted(new_parts),
-                    "added": new_parts,
-                    "legacy_dirs": list(latest.get("legacy_dirs", [])),
-                    "legacy_specs": list(latest.get("legacy_specs", [])),
-                    # tombstones carry forward untouched: they are scoped
-                    # to the dirs they were committed against, and an
-                    # append never replaces a dir
-                    "tombstones": latest.get("tombstones", {}),
-                    "tombstone_key_cols": latest.get("tombstone_key_cols"),
-                    "stats_cols": list(latest.get("stats_cols", [])),
-                    "stats": stats,
-                    "file_stats": {
-                        **latest.get("file_stats", {}),
-                        **new_fstats,
-                    },
-                    "bloom_cols": list(latest.get("bloom_cols", [])),
-                    "blooms": blooms,
-                    "tokens": tokens,
-                }
+                commit_dir, latest["version"], manifest
             )
+
+    def _append_base(
+        self, df: DataFrame, what: str, commit_token: str | None = None
+    ) -> dict:
+        """The current manifest an append-shaped batch is checked and
+        laid out against (a replayed token skips the check). Appends are
+        schema-strict: a silently mismatched batch would write files the
+        manifest schema reads back as NULLs."""
+        if not self.exists():
+            raise ValueError(
+                f"{what} needs an existing table; use write_initial() first"
+            )
+        m = self._read_manifest()
+        if _replayed(m, commit_token):
+            return m
+        want = {
+            f.name: f.dataType
+            for f in StructType.fromJson(json.loads(m["schema"])).fields
+        }
+        got = {f.name: f.dataType for f in df.schema.fields}
+        if got != want:
+            raise ValueError(
+                f"{what} batch schema does not match the table schema "
+                f"(want {sorted(want)}, got {sorted(got)}); appends are "
+                "schema-strict — evolve via merge(allow_schema_evolution"
+                "=True) first"
+            )
+        return m
 
     # -- WRITE-AUDIT-PUBLISH (staged commits) ----------------------------------
 
@@ -1550,32 +1677,8 @@ class VersionedTable:
         rebase. At 100 TB the stage is the expensive part (the batch's
         bytes) and runs lock-free; audit cost is the validation
         queries; publish is one metadata CAS."""
-        if not self.exists():
-            raise ValueError(
-                "stage_append() needs an existing table; use "
-                "write_initial() first"
-            )
-        m = self._read_manifest()
-        want = {
-            f.name: f.dataType
-            for f in StructType.fromJson(json.loads(m["schema"])).fields
-        }
-        got = {f.name: f.dataType for f in df.schema.fields}
-        if got.keys() != want.keys() or any(
-            got[n] != want[n] for n in want
-        ):
-            raise ValueError(
-                "stage_append() batch schema does not match the table "
-                f"schema (want {sorted(want)}, got {sorted(got)})"
-            )
-        new_parts, new_stats, new_blooms, new_fstats, _commit_dir = (
-            self._write_commit_data(
-                df,
-                m["partition_col"],
-                m.get("stats_cols") or None,
-                m.get("bloom_cols") or None,
-            )
-        )
+        m = self._append_base(df, "stage_append()")
+        new_parts, meta, _commit_dir = self._write_table_data(df, m)
         staged_id = uuid.uuid4().hex[:12]
         staged = {
             "staged_id": staged_id,
@@ -1589,17 +1692,11 @@ class VersionedTable:
             "partitions": new_parts,
             "touched": sorted(new_parts),
             "added": new_parts,
-            "stats": new_stats,
-            "file_stats": new_fstats,
-            "blooms": new_blooms,
+            **meta,
         }
-        path = self._staged_path(staged_id)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(staged, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path)
+        tablefs.write_atomic(
+            self._staged_path(staged_id), json.dumps(staged), "staged.write"
+        )
         return staged_id
 
     def read_staged(self, spark: SparkSession, staged_id: str) -> DataFrame:
@@ -1630,9 +1727,7 @@ class VersionedTable:
         staged = self._read_staged(staged_id)
         with self.coordinator.exclusive(self):
             latest = self._read_manifest()
-            if commit_token is not None and commit_token in latest.get(
-                "tokens", []
-            ):
+            if _replayed(latest, commit_token):
                 # replayed publish: the token already committed. Two
                 # cases share this path — (a) a RE-staged redundant copy
                 # (fresh dirs, safe to reclaim) and (b) the ORIGINAL
@@ -1640,69 +1735,20 @@ class VersionedTable:
                 # swap and the record removal, whose dirs ARE the live
                 # table data. Only reclaim dirs no retained committed
                 # manifest references.
-                staged_cids = {
-                    d.split(os.sep)[1]
-                    for ds in staged["partitions"].values()
-                    for d in ds
-                }
-                for cid in staged_cids - self._live_commit_ids():
-                    shutil.rmtree(
-                        os.path.join(self.root, "data", cid),
-                        ignore_errors=True,
-                    )
-                os.remove(self._staged_path(staged_id))
+                self._drop_staged(staged_id, staged)
                 return latest["version"]
-            if latest["schema"] != staged["schema"]:
-                raise CommitConflict(
-                    "schema changed since this batch was staged; "
-                    "discard_staged() and re-stage against the new schema"
-                )
-            if latest["partition_col"] != staged["partition_col"]:
-                raise CommitConflict(
-                    "partitioning evolved since this batch was staged "
-                    f"({staged['partition_col']!r} -> "
-                    f"{latest['partition_col']!r}); discard_staged() and "
-                    "re-stage under the new spec"
-                )
-            parts = {k: list(v) for k, v in latest["partitions"].items()}
-            for key, dirs in staged["added"].items():
-                parts.setdefault(key, []).extend(dirs)
-            stats = dict(latest.get("stats", {}))
-            stats.update(staged.get("stats", {}))
-            blooms = dict(latest.get("blooms", {}))
-            blooms.update(staged.get("blooms", {}))
-            tokens = list(latest.get("tokens", []))
-            if commit_token is not None:
-                tokens = (tokens + [commit_token])[-_TOKEN_WINDOW:]
             version = self.coordinator.swap_or_conflict(
                 self,
-                {
-                    "version": latest["version"] + 1,
-                    "parent": latest["version"],
-                    "op": "append",
-                    "staged_id": staged_id,
-                    "partition_col": latest["partition_col"],
-                    "schema": latest["schema"],
-                    "partitions": parts,
-                    "touched": sorted(staged["added"]),
-                    "added": staged["added"],
-                    "legacy_dirs": list(latest.get("legacy_dirs", [])),
-                    "legacy_specs": list(latest.get("legacy_specs", [])),
-                    "tombstones": latest.get("tombstones", {}),
-                    "tombstone_key_cols": latest.get("tombstone_key_cols"),
-                    "stats_cols": list(latest.get("stats_cols", [])),
-                    "stats": stats,
-                    "file_stats": {
-                        **latest.get("file_stats", {}),
-                        **staged.get("file_stats", {}),
-                    },
-                    "bloom_cols": list(latest.get("bloom_cols", [])),
-                    "blooms": blooms,
-                    "tokens": tokens,
-                },
+                _append_fold(
+                    latest,
+                    staged,
+                    commit_token,
+                    "discard_staged() and re-stage the batch",
+                    staged_id=staged_id,
+                ),
                 latest["version"],
             )
-            os.remove(self._staged_path(staged_id))
+            tablefs.remove(self._staged_path(staged_id), "staged.remove")
             return version
 
     def _live_commit_ids(self, exclude_branch: str | None = None) -> set[str]:
@@ -1711,31 +1757,36 @@ class VersionedTable:
         ``exclude_branch``) — data, tombstone, or legacy dirs.
         Metadata-only scan; used to refuse reclaiming dirs a crashed
         publish made live and to scope drop_branch reclamation."""
-        ids: set[str] = set()
-        main_dir = os.path.join(self.root, "_manifests")
-        scan_dirs = [main_dir]
-        broot = os.path.join(main_dir, "branches")
-        if os.path.isdir(broot):
-            scan_dirs.extend(
-                os.path.join(broot, b)
-                for b in os.listdir(broot)
-                if b != exclude_branch
-                and os.path.isdir(os.path.join(broot, b))
+        return {
+            _commit_id(d)
+            for mdir in self._ref_dirs(exclude_branch)
+            for _, m in _listed(mdir)
+            for d in _dirs_of(m)
+        }
+
+    def _ref_dirs(self, exclude_branch: str | None = None) -> list[str]:
+        """The manifest dirs of main and of every branch but
+        ``exclude_branch``, main first."""
+        return [os.path.join(self.root, "_manifests")] + [
+            os.path.join(self._branches_root(), b)
+            for b in self.list_branches()
+            if b != exclude_branch
+        ]
+
+    def _drop_staged(self, staged_id: str, staged: dict) -> None:
+        """Remove a staging record, then reclaim its data dirs that no
+        retained committed manifest references. The record goes FIRST so
+        a concurrent vacuum cannot re-read it mid-delete and 'protect'
+        half-deleted dirs."""
+        commits = {_commit_id(d) for d in _dirs_of(staged)}
+        dead = commits - self._live_commit_ids()
+        tablefs.remove(self._staged_path(staged_id), "staged.remove")
+        for cid in sorted(dead):
+            tablefs.rmtree(
+                os.path.join(self.root, "data", cid),
+                "data.discard",
+                ignore_errors=True,
             )
-        for mdir in scan_dirs:
-            for name in os.listdir(mdir):
-                if not (name.startswith("v") and name.endswith(".json")):
-                    continue
-                with open(os.path.join(mdir, name)) as fh:
-                    m = json.load(fh)
-                for ds in m.get("partitions", {}).values():
-                    ids.update(d.split(os.sep)[1] for d in ds)
-                for ds in m.get("tombstones", {}).values():
-                    ids.update(d.split(os.sep)[1] for d in ds)
-                ids.update(
-                    d.split(os.sep)[1] for d in m.get("legacy_dirs", [])
-                )
-        return ids
 
     def discard_staged(self, staged_id: str) -> None:
         """Failed-audit exit: reclaim the staged batch's data dirs and
@@ -1751,21 +1802,7 @@ class VersionedTable:
         exclusive section so it cannot interleave with a concurrent
         publish of the same staged id."""
         with self.coordinator.exclusive(self):
-            staged = self._read_staged(staged_id)
-            commits = {
-                d.split(os.sep)[1]
-                for ds in staged["partitions"].values()
-                for d in ds
-            }
-            published = commits & self._live_commit_ids()
-            # remove the record FIRST so a concurrent vacuum cannot
-            # re-read it mid-delete and 'protect' half-deleted dirs
-            os.remove(self._staged_path(staged_id))
-            for cid in commits - published:
-                shutil.rmtree(
-                    os.path.join(self.root, "data", cid),
-                    ignore_errors=True,
-                )
+            self._drop_staged(staged_id, self._read_staged(staged_id))
 
     # -- NAMED BRANCHES (refs over the WAP machinery) --------------------------
 
@@ -1830,9 +1867,12 @@ class VersionedTable:
                     "unsupported — run a full compact() (spec "
                     "migration) first"
                 )
-            os.makedirs(bt._manifest_dir, exist_ok=True)
-            with open(os.path.join(bt._manifest_dir, "_base"), "w") as fh:
-                fh.write(str(m["version"]))
+            tablefs.makedirs(bt._manifest_dir, "branch.mkdir")
+            tablefs.write_atomic(
+                os.path.join(bt._manifest_dir, "_base"),
+                str(m["version"]),
+                "branch.base",
+            )
             bt._commit(dict(m))  # branch head starts as a copy of main's
         return bt
 
@@ -1928,58 +1968,24 @@ class VersionedTable:
                 else:
                     tombs.pop(k, None)
             live = {d for ds in parts.values() for d in ds}
-            stats = {
-                d: s
-                for d, s in {
-                    **latest.get("stats", {}),
-                    **bh.get("stats", {}),
-                }.items()
-                if d in live
-            }
-            blooms = {
-                d: b
-                for d, b in {
-                    **latest.get("blooms", {}),
-                    **bh.get("blooms", {}),
-                }.items()
-                if d in live
-            }
             version = self.coordinator.swap_or_conflict(
                 self,
-                {
-                    "version": latest["version"] + 1,
-                    "parent": latest["version"],
-                    "op": "branch_merge",
-                    "branch": name,
-                    "branch_base": base,
-                    "branch_head": bh["version"],
-                    "partition_col": latest["partition_col"],
-                    "schema": schema_json,
-                    "partitions": parts,
-                    "touched": sorted(touched),
-                    "added": added,
-                    "legacy_dirs": [],
-                    "legacy_specs": list(latest.get("legacy_specs", [])),
-                    "tombstones": tombs,
-                    "tombstone_key_cols": (
-                        bkc if bkc is not None else lkc
-                    )
+                _successor(
+                    latest,
+                    "branch_merge",
+                    branch=name,
+                    branch_base=base,
+                    branch_head=bh["version"],
+                    schema=schema_json,
+                    partitions=parts,
+                    touched=sorted(touched),
+                    added=added,
+                    tombstones=tombs,
+                    tombstone_key_cols=(bkc if bkc is not None else lkc)
                     if tombs
                     else None,
-                    "stats_cols": list(latest.get("stats_cols", [])),
-                    "stats": stats,
-                    "file_stats": self._carry_file_stats(
-                        {
-                            **latest.get("file_stats", {}),
-                            **bh.get("file_stats", {}),
-                        },
-                        live,
-                        {},
-                    ),
-                    "bloom_cols": list(latest.get("bloom_cols", [])),
-                    "blooms": blooms,
-                    "tokens": list(latest.get("tokens", [])),
-                },
+                    **_live_metadata(live, latest, bh),
+                ),
                 latest["version"],
             )
         if drop:
@@ -1994,33 +2000,26 @@ class VersionedTable:
         self._require_main("drop_branch()")
         bt = self.branch(name)
         with self.coordinator.exclusive(self):
-            branch_ids: set[str] = set()
-            for n in os.listdir(bt._manifest_dir):
-                if not (n.startswith("v") and n.endswith(".json")):
-                    continue
-                with open(os.path.join(bt._manifest_dir, n)) as fh:
-                    m = json.load(fh)
-                for ds in m.get("partitions", {}).values():
-                    branch_ids.update(d.split(os.sep)[1] for d in ds)
-                for ds in m.get("tombstones", {}).values():
-                    branch_ids.update(d.split(os.sep)[1] for d in ds)
+            branch_ids = {
+                _commit_id(d)
+                for _, m in _listed(bt._manifest_dir)
+                for d in _dirs_of(m)
+            }
             live = self._live_commit_ids(exclude_branch=name)
             # also protect pending staged batches' dirs
-            for n in os.listdir(os.path.join(self.root, "_manifests")):
-                if n.startswith("staged-") and n.endswith(".json"):
-                    with open(
-                        os.path.join(self.root, "_manifests", n)
-                    ) as fh:
-                        st = json.load(fh)
-                    for ds in st.get("partitions", {}).values():
-                        live.update(d.split(os.sep)[1] for d in ds)
+            live.update(
+                _commit_id(d)
+                for _, st in _listed(self._manifest_dir, "staged-")
+                for d in _dirs_of(st)
+            )
             # remove the ref FIRST (crash between rmtrees leaves only
             # orphaned-but-unreferenced dirs, never a dangling ref)
-            shutil.rmtree(bt._manifest_dir, ignore_errors=True)
+            tablefs.rmtree(bt._manifest_dir, "branch.remove", ignore_errors=True)
             reclaimed = sorted(branch_ids - live)
             for cid in reclaimed:
-                shutil.rmtree(
+                tablefs.rmtree(
                     os.path.join(self.root, "data", cid),
+                    "data.discard",
                     ignore_errors=True,
                 )
             return reclaimed
@@ -2084,29 +2083,20 @@ class VersionedTable:
             )
             return self.coordinator.swap_or_conflict(
                 self,
-                {
-                    "version": m["version"] + 1,
-                    "parent": m["version"],
-                    "op": "evolve_partition",
-                    "partition_col": new_partition_col,
-                    "schema": m["schema"],
-                    "partitions": {},
-                    "touched": [],
-                    "added": {},
-                    "legacy_dirs": legacy_dirs,
-                    "legacy_specs": list(m.get("legacy_specs", []))
+                _successor(
+                    m,
+                    "evolve_partition",
+                    partition_col=new_partition_col,
+                    partitions={},
+                    touched=[],
+                    added={},
+                    legacy_dirs=legacy_dirs,
+                    legacy_specs=list(m.get("legacy_specs", []))
                     + [m["partition_col"]],
-                    "tombstones": (
+                    tombstones=(
                         {_LEGACY_KEY: legacy_tombs} if legacy_tombs else {}
                     ),
-                    "tombstone_key_cols": m.get("tombstone_key_cols"),
-                    "stats_cols": list(m.get("stats_cols", [])),
-                    "stats": m.get("stats", {}),
-                    "file_stats": m.get("file_stats", {}),
-                    "bloom_cols": list(m.get("bloom_cols", [])),
-                    "blooms": m.get("blooms", {}),
-                    "tokens": list(m.get("tokens", [])),
-                },
+                ),
                 m["version"],
             )
 
@@ -2144,37 +2134,12 @@ class VersionedTable:
                 delta = delta.join(
                     deletes.select(*key_cols), key_cols, "left_anti"
                 )
-            parts0, stats0, _blooms0, _fstats0, commit_dir0 = (
-                self._write_commit_data(delta, partition_col)
+            return self._create(
+                delta, partition_col, commit_token, key_cols=list(key_cols)
             )
-            with self.coordinator.exclusive(self):
-                if self.exists():
-                    self._discard_commit_dir(commit_dir0)
-                    raise CommitConflict(
-                        f"table appeared concurrently at {self.root}; "
-                        "re-run the merge against the current snapshot"
-                    )
-                return self._swap_or_reclaim(
-                    commit_dir0,
-                    0,
-                    {
-                        "version": 1,
-                        "parent": 0,
-                        "op": "create",
-                        "partition_col": partition_col,
-                        "schema": delta.schema.json(),
-                        "partitions": parts0,
-                        "touched": sorted(parts0),
-                        "added": parts0,
-                        "key_cols": list(key_cols),
-                        "stats_cols": [],
-                        "stats": stats0,
-                        "tokens": [commit_token] if commit_token else [],
-                    }
-                )
         spark = delta.sparkSession
         m = self._read_manifest()
-        if commit_token is not None and commit_token in m.get("tokens", []):
+        if _replayed(m, commit_token):
             return m["version"]  # replayed batch: already applied
         if partition_col != m["partition_col"]:
             raise ValueError(
@@ -2247,14 +2212,7 @@ class VersionedTable:
             merged = survivors.unionByName(delta, allowMissingColumns=True)
         else:
             merged = survivors.unionByName(delta)
-        new_parts, new_stats, new_blooms, new_fstats, commit_dir = (
-            self._write_commit_data(
-                merged,
-                partition_col,
-                m.get("stats_cols") or None,
-                m.get("bloom_cols") or None,
-            )
-        )
+        new_parts, meta, commit_dir = self._write_table_data(merged, m)
         ltomb_dirs: list[str] = []
         ltomb_commit_dir: str | None = None
         if tomb_src is not None:
@@ -2266,8 +2224,8 @@ class VersionedTable:
                 _TOMB_DIR_COL,
                 F.array(*[F.lit(d) for d in legacy_dirs]),
             )
-            lparts, _ls, _lb, _lf, ltomb_commit_dir = (
-                self._write_commit_data(ltomb, partition_col)
+            lparts, _meta, ltomb_commit_dir = self._write_commit_data(
+                ltomb, partition_col
             )
             ltomb_dirs = [d for ds in lparts.values() for d in ds]
 
@@ -2284,9 +2242,7 @@ class VersionedTable:
         }
         with self.coordinator.exclusive(self):
             latest = self._read_manifest()
-            if commit_token is not None and commit_token in latest.get(
-                "tokens", []
-            ):
+            if _replayed(latest, commit_token):
                 _discard_all()
                 return latest["version"]
             if latest["partition_col"] != m["partition_col"]:
@@ -2351,25 +2307,9 @@ class VersionedTable:
                     parts.pop(key, None)
                 else:
                     parts[key] = new_dirs
-            latest_legacy = list(latest.get("legacy_dirs", []))
             live = {d for ds in parts.values() for d in ds} | set(
-                latest_legacy
+                latest.get("legacy_dirs", [])
             )
-            stats = {
-                d: s
-                for d, s in latest.get("stats", {}).items()
-                if d in live
-            }
-            stats.update(new_stats)
-            blooms = {
-                d: b
-                for d, b in latest.get("blooms", {}).items()
-                if d in live
-            }
-            blooms.update(new_blooms)
-            tokens = list(latest.get("tokens", []))
-            if commit_token is not None:
-                tokens = (tokens + [commit_token])[-_TOKEN_WINDOW:]
             old_tombs = latest.get("tombstones", {})
             # the rewrite read THROUGH the touched partitions'
             # tombstones, so the new files already lack those rows: fold
@@ -2389,48 +2329,36 @@ class VersionedTable:
             try:
                 return self.coordinator.swap_or_conflict(
                     self,
-                    {
-                        "version": latest["version"] + 1,
-                        "parent": latest["version"],
-                        "op": "merge",
-                        "partition_col": partition_col,
-                        "schema": schema_json,
-                        "partitions": parts,
-                        "touched": sorted(touched_keys),
-                        "added": new_parts,
-                        "replaced": replaced,
-                        "legacy_dirs": latest_legacy,
-                        "legacy_specs": list(
-                            latest.get("legacy_specs", [])
-                        ),
-                        "tombstones": tombs,
-                        "replaced_tombstones": {
+                    _successor(
+                        latest,
+                        "merge",
+                        commit_token,
+                        schema=schema_json,
+                        partitions=parts,
+                        touched=sorted(touched_keys),
+                        added=new_parts,
+                        replaced=replaced,
+                        tombstones=tombs,
+                        replaced_tombstones={
                             k: list(old_tombs[k])
                             for k in touched_keys
                             if k in old_tombs
                         },
                         # change-feed reconstruction of legacy pre-images
-                        "legacy_tombstones_added": ltomb_dirs,
-                        "legacy_covered": legacy_dirs,
-                        "legacy_prior_tombstones": list(
+                        legacy_tombstones_added=ltomb_dirs,
+                        legacy_covered=legacy_dirs,
+                        legacy_prior_tombstones=list(
                             old_tombs.get(_LEGACY_KEY, [])
                         ),
-                        "tombstone_key_cols": (
+                        tombstone_key_cols=(
                             list(key_cols)
                             if ltomb_dirs
                             else latest.get("tombstone_key_cols")
                         ),
-                        "key_cols": list(key_cols),
-                        "parent_schema": m["schema"],
-                        "stats_cols": list(latest.get("stats_cols", [])),
-                        "stats": stats,
-                        "file_stats": self._carry_file_stats(
-                            latest.get("file_stats", {}), live, new_fstats
-                        ),
-                        "bloom_cols": list(latest.get("bloom_cols", [])),
-                        "blooms": blooms,
-                        "tokens": tokens,
-                    },
+                        key_cols=list(key_cols),
+                        parent_schema=m["schema"],
+                        **_live_metadata(live, latest, meta),
+                    ),
                     latest["version"],
                 )
             except CommitConflict:
@@ -2479,7 +2407,7 @@ class VersionedTable:
             raise ValueError("delete_keys() needs an existing table")
         spark = keys.sparkSession
         m = self._read_manifest()
-        if commit_token is not None and commit_token in m.get("tokens", []):
+        if _replayed(m, commit_token):
             return m["version"]
         pc = m["partition_col"]
         schema = StructType.fromJson(json.loads(m["schema"]))
@@ -2566,14 +2494,10 @@ class VersionedTable:
             F.broadcast(dirs_df),
             F.col(pc).eqNullSafe(F.col("__vt_pk")),
         ).select(*dict.fromkeys([*key_cols, pc]), _TOMB_DIR_COL)
-        new_tombs, _, _nb, _nf, commit_dir = self._write_commit_data(
-            tomb, pc
-        )
+        new_tombs, _meta, commit_dir = self._write_commit_data(tomb, pc)
         with self.coordinator.exclusive(self):
             latest = self._read_manifest()
-            if commit_token is not None and commit_token in latest.get(
-                "tokens", []
-            ):
+            if _replayed(latest, commit_token):
                 self._discard_commit_dir(commit_dir)
                 return latest["version"]
             if latest["version"] != m["version"]:
@@ -2631,43 +2555,29 @@ class VersionedTable:
                 tombs[_LEGACY_KEY] = list(
                     dict.fromkeys(tombs.get(_LEGACY_KEY, []) + flat)
                 )
-            tokens = list(latest.get("tokens", []))
-            if commit_token is not None:
-                tokens = (tokens + [commit_token])[-_TOKEN_WINDOW:]
             return self._swap_or_reclaim(
                 commit_dir,
                 latest["version"],
-                {
-                    "version": latest["version"] + 1,
-                    "parent": latest["version"],
-                    "op": "delete",
-                    "partition_col": pc,
-                    "schema": latest["schema"],
-                    "partitions": latest["partitions"],
-                    "touched": sorted(new_tombs),
-                    "added": {},
-                    "tombstones": tombs,
-                    "tombstones_added": new_tombs,
-                    "tombstone_key_cols": list(key_cols),
+                _successor(
+                    latest,
+                    "delete",
+                    commit_token,
+                    touched=sorted(new_tombs),
+                    added={},
+                    tombstones=tombs,
+                    tombstones_added=new_tombs,
+                    tombstone_key_cols=list(key_cols),
                     # change-feed support: the data dirs this tombstone
                     # covers (as of base) and the tombstones that were
                     # ALREADY live on them (rows those deleted must not
                     # re-emit as deletes)
-                    "applies": applies,
-                    "prior_tombstones": {
+                    applies=applies,
+                    prior_tombstones={
                         k: list(latest.get("tombstones", {}).get(k, []))
                         for k in [*touched_keys, _LEGACY_KEY]
                     },
-                    "legacy_dirs": list(latest.get("legacy_dirs", [])),
-                    "legacy_specs": list(latest.get("legacy_specs", [])),
-                    "key_cols": list(key_cols),
-                    "stats_cols": list(latest.get("stats_cols", [])),
-                    "stats": latest.get("stats", {}),
-                    "file_stats": latest.get("file_stats", {}),
-                    "bloom_cols": list(latest.get("bloom_cols", [])),
-                    "blooms": latest.get("blooms", {}),
-                    "tokens": tokens,
-                }
+                    key_cols=list(key_cols),
+                ),
             )
 
     # -- layout maintenance ----------------------------------------------------
@@ -2734,14 +2644,7 @@ class VersionedTable:
                 at_version=m["version"],
                 include_legacy=False,
             ).repartition(F.col(pc))
-        new_parts, new_stats, new_blooms, new_fstats, commit_dir = (
-            self._write_commit_data(
-                df,
-                pc,
-                m.get("stats_cols") or None,
-                m.get("bloom_cols") or None,
-            )
-        )
+        new_parts, meta, commit_dir = self._write_table_data(df, m)
         target_keys = set(targets)
         # snapshot the dirs THIS commit introduced before any rebase
         # concatenates foreign append dirs into new_parts
@@ -2820,36 +2723,20 @@ class VersionedTable:
             live = {d for ds in merged.values() for d in ds} | set(
                 out_legacy
             )
-            stats = {
-                d: s
-                for d, s in latest.get("stats", {}).items()
-                if d in live
-            }
-            stats.update(new_stats)
-            blooms = {
-                d: b
-                for d, b in latest.get("blooms", {}).items()
-                if d in live
-            }
-            blooms.update(new_blooms)
             return self._swap_or_reclaim(
                 commit_dir,
                 latest["version"],
-                {
-                    "version": latest["version"] + 1,
-                    "parent": latest["version"],
-                    "op": "compact",
-                    "partition_col": pc,
-                    "schema": latest["schema"],
-                    "partitions": merged,
-                    "touched": sorted(new_parts),
-                    "added": added,
-                    "legacy_dirs": out_legacy,
-                    "legacy_specs": list(latest.get("legacy_specs", [])),
+                _successor(
+                    latest,
+                    "compact",
+                    partitions=merged,
+                    touched=sorted(new_parts),
+                    added=added,
+                    legacy_dirs=out_legacy,
                     # the rewrite read through the targets' tombstones
                     # (folded); non-target partitions' tombstones carry.
                     # A migration read through EVERYTHING: all clear.
-                    "tombstones": (
+                    tombstones=(
                         {}
                         if migrate
                         else {
@@ -2860,20 +2747,13 @@ class VersionedTable:
                             if k not in target_keys
                         }
                     ),
-                    "tombstone_key_cols": (
+                    tombstone_key_cols=(
                         None
                         if migrate
                         else latest.get("tombstone_key_cols")
                     ),
-                    "stats_cols": list(latest.get("stats_cols", [])),
-                    "stats": stats,
-                    "file_stats": self._carry_file_stats(
-                        latest.get("file_stats", {}), live, new_fstats
-                    ),
-                    "bloom_cols": list(latest.get("bloom_cols", [])),
-                    "blooms": blooms,
-                    "tokens": list(latest.get("tokens", [])),
-                }
+                    **_live_metadata(live, latest, meta),
+                ),
             )
 
     # -- retention -----------------------------------------------------------
@@ -2898,80 +2778,58 @@ class VersionedTable:
         # so it runs under the coordinator's exclusive section — a
         # CAS-only coordinator must provide one (or not offer vacuum)
         with self.coordinator.exclusive(self):
-            # ignore stale .tmp-* leftovers from a crashed commit attempt —
-            # only fsync'd, os.replace'd manifests count
-            all_json = [
-                n
-                for n in os.listdir(self._manifest_dir)
-                if n.endswith(".json")
-            ]
-            # retention applies to COMMITTED manifests only; staged
-            # (write-audit-publish) manifests are neither droppable nor
-            # reclaimable here — their data dirs are protected until
-            # publish_staged()/discard_staged() decides their fate
-            names = sorted(n for n in all_json if n.startswith("v"))
-            staged = [n for n in all_json if n.startswith("staged-")]
             with open(self._pointer) as fh:
                 current = fh.read().strip()
-            # retention is relative to the current pointer; the writer
-            # lock pins it for the duration of the sweep
-            names = [n for n in names if n <= current]
-            keep, drop = names[-keep_last:], names[:-keep_last]
-            if current not in keep:
-                keep.append(current)
-            def _dirs_of(manifest: dict):
-                for ds in manifest["partitions"].values():
-                    yield from ds
-                # tombstone dirs are first-class data: a retained
-                # snapshot's merge-on-read reconstruction needs them
-                for ds in manifest.get("tombstones", {}).values():
-                    yield from ds
-                # legacy (retired-spec) dirs are live data until a full
-                # compact migrates them
-                yield from manifest.get("legacy_dirs", [])
-
-            referenced: set[str] = set()
-            for n in keep + staged:
-                with open(os.path.join(self._manifest_dir, n)) as fh:
-                    referenced.update(_dirs_of(json.load(fh)))
+            # retention applies to COMMITTED manifests up to the current
+            # pointer (the writer lock pins it for the sweep). Staged
+            # (write-audit-publish) records are neither droppable nor
+            # reclaimable here — their data dirs are protected until
+            # publish_staged()/discard_staged() decides their fate.
+            committed = [
+                (n, m) for n, m in _listed(self._manifest_dir) if n <= current
+            ]
+            keep, drop = committed[-keep_last:], committed[:-keep_last]
+            referenced = {
+                d
+                for _, m in keep + list(_listed(self._manifest_dir, "staged-"))
+                for d in _dirs_of(m)
+            }
             # every branch's every manifest is live: a long-lived branch
             # must never race main's retention (drop_branch reclaims)
-            broot = self._branches_root()
-            if os.path.isdir(broot):
-                for b in os.listdir(broot):
-                    bdir = os.path.join(broot, b)
-                    if not os.path.isdir(bdir):
-                        continue
-                    for n in os.listdir(bdir):
-                        if n.startswith("v") and n.endswith(".json"):
-                            with open(os.path.join(bdir, n)) as fh:
-                                referenced.update(_dirs_of(json.load(fh)))
+            referenced.update(
+                d
+                for mdir in self._ref_dirs()[1:]
+                for _, m in _listed(mdir)
+                for d in _dirs_of(m)
+            )
             removed: list[str] = []
-            for n in drop:
-                path = os.path.join(self._manifest_dir, n)
-                with open(path) as fh:
-                    for d in _dirs_of(json.load(fh)):
-                        if d not in referenced:
-                            shutil.rmtree(
-                                os.path.join(self.root, d),
-                                ignore_errors=True,
+            for n, m in drop:
+                for d in _dirs_of(m):
+                    if d in referenced:
+                        continue
+                    tablefs.rmtree(
+                        os.path.join(self.root, d),
+                        "vacuum.data",
+                        ignore_errors=True,
+                    )
+                    removed.append(d)
+                    referenced.add(d)  # only rmtree once
+                    # reap the data/<commit>/ shell once its last
+                    # partition leaf is gone — otherwise empty commit
+                    # dirs (holding only _SUCCESS markers) accumulate
+                    # forever
+                    shell = os.path.dirname(os.path.join(self.root, d))
+                    try:
+                        if not any(
+                            x.startswith(f"{_PART_DIR}=")
+                            for x in os.listdir(shell)
+                        ):
+                            tablefs.rmtree(
+                                shell, "vacuum.shell", ignore_errors=True
                             )
-                            removed.append(d)
-                            referenced.add(d)  # only rmtree once
-                            # reap the data/<commit>/ shell once its last
-                            # partition leaf is gone — otherwise empty
-                            # commit dirs (holding only _SUCCESS markers)
-                            # accumulate forever
-                            shell = os.path.dirname(
-                                os.path.join(self.root, d)
-                            )
-                            try:
-                                if not any(
-                                    x.startswith(f"{_PART_DIR}=")
-                                    for x in os.listdir(shell)
-                                ):
-                                    shutil.rmtree(shell, ignore_errors=True)
-                            except FileNotFoundError:
-                                pass
-                os.remove(path)
+                    except FileNotFoundError:
+                        pass
+                tablefs.remove(
+                    os.path.join(self._manifest_dir, n), "vacuum.manifest"
+                )
             return removed

@@ -625,10 +625,8 @@ def fit_centroids(
 
 def threshold_pair_join(
     assigned: DataFrame,
-    cents: DataFrame | None,
     tau: float,
     eps: float = 1e-6,
-    checkpoint_scored: bool = True,
 ) -> DataFrame:
     """EXACT cosine-threshold self-join: ALL unordered pairs with
     round(cos, 6) >= tau — embedding-level near-duplicate detection as a
@@ -670,8 +668,7 @@ def threshold_pair_join(
       cosine.
 
     ``assigned`` needs only (vec_id, emb, nrm) — prepare_vectors output
-    is enough; ``cents`` is accepted (and ignored) for API stability.
-    Returns (vec_a, vec_b, cos_sim) with vec_a < vec_b.
+    is enough. Returns (vec_a, vec_b, cos_sim) with vec_a < vec_b.
     """
     delta = math.sqrt(max(0.0, 2.0 - 2.0 * (tau - eps)))
     # pin the assignment (the nn_descent lesson): `assigned` feeds FOUR
@@ -688,8 +685,7 @@ def threshold_pair_join(
     # test_cell_pair_pruning_bites_on_clustered_data); the grid subsumes
     # it for enumeration: a dense cluster lands in one grid cell either
     # way, and the grid keeps pruning where cells are geometrically
-    # blind. ``cents`` stays in the signature for API stability.
-    _ = cents
+    # blind.
     assigned = assigned.select("vec_id", "emb", "nrm").persist()
 
     from functools import reduce as _reduce
@@ -845,9 +841,7 @@ def threshold_pair_join(
     # that stream already paid; fault-tolerance trade documented at the
     # other localCheckpoint sites). Lazy: plan construction stays
     # job-free. Measured: j43 one-shot 9.05 -> 6.58 s, j37 2.64 -> 2.37
-    # (noop write, idle, canonical order). `checkpoint_scored=False`
-    # returns the transparent un-truncated plan that the plan assertions
-    # in tests/test_threshold_pairs.py read: in the checkpointed plan
+    # (noop write, idle, canonical order). In the checkpointed plan
     # (plans/r11/j37_after.txt) the scored stream is one `Scan
     # ExistingRDD`, which hides the join tree from explain.
     scored = (
@@ -855,9 +849,8 @@ def threshold_pair_join(
         .join(va, F.col("vec_a") == F.col("va.vec_id"))
         .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
         .select("vec_a", "vec_b", pair_cos.alias("cos_sim"))
+        .localCheckpoint(eager=False)
     )
-    if checkpoint_scored:
-        scored = scored.localCheckpoint(eager=False)
     return scored.filter(F.col("cos_sim") >= F.lit(tau))
 
 

@@ -32,12 +32,12 @@ partitions to the same content.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scopus_spark.operators import tablefs
 from scopus_spark.operators.manifest import _partition_dir
 
 
@@ -51,9 +51,9 @@ def _recover_interrupted_swap(target_path: str, partition_col: str) -> None:
             live = os.path.join(target_path, name[1:-4])
             parked = os.path.join(target_path, name)
             if not os.path.exists(live):
-                os.rename(parked, live)
+                tablefs.rename(parked, live, "recover.unpark")
             else:
-                shutil.rmtree(parked)
+                tablefs.rmtree(parked, "recover.drop")
 
 
 def upsert_partitioned(
@@ -82,6 +82,7 @@ def upsert_partitioned(
     never reads, surviving as a duplicate.
     """
     if not os.path.exists(target_path):
+        tablefs.step("data.write")
         delta.write.partitionBy(partition_col).parquet(target_path)
         return
     _recover_interrupted_swap(target_path, partition_col)
@@ -107,28 +108,26 @@ def upsert_partitioned(
     staging = f"{target_path}.staging-{uuid.uuid4().hex[:12]}"
     try:
         # Full write completes BEFORE the target is touched at all.
+        tablefs.step("data.write")
         merged.write.partitionBy(partition_col).parquet(staging)
         for val in touched:
             part = f"{partition_col}={_partition_dir(val)}"
             new_dir = os.path.join(staging, part)
             live_dir = os.path.join(target_path, part)
             parked = os.path.join(target_path, f".{part}.old")
-            if not os.path.isdir(new_dir):
-                # staging holds the partition's COMPLETE new content; no
-                # dir means deletes emptied it — remove the live partition
-                # (unreachable for upsert-only deltas: touched partitions
-                # always contain delta rows there). Park first: a crash
-                # mid-rmtree must never leave a half-deleted LIVE dir —
-                # the recovery sweep restores a parked dir whose partition
-                # is missing, and the idempotent re-run re-deletes it.
-                if os.path.exists(live_dir):
-                    os.rename(live_dir, parked)
-                    shutil.rmtree(parked)
-                continue
+            # park -> move -> unpark (drop the parked copy). Staging
+            # holds the partition's COMPLETE new content; no staged dir
+            # means deletes emptied it, so the live dir is parked and
+            # dropped (unreachable for upsert-only deltas: touched
+            # partitions always contain delta rows there). Parking first
+            # means a crash never leaves a half-deleted or half-moved
+            # LIVE dir: the recovery sweep restores a parked dir whose
+            # partition is missing, and the idempotent re-run redoes it.
             if os.path.exists(live_dir):
-                os.rename(live_dir, parked)
-            os.rename(new_dir, live_dir)
+                tablefs.rename(live_dir, parked, "swap.park")
+            if os.path.isdir(new_dir):
+                tablefs.rename(new_dir, live_dir, "swap.move")
             if os.path.exists(parked):
-                shutil.rmtree(parked)
+                tablefs.rmtree(parked, "swap.unpark")
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        tablefs.rmtree(staging, "staging.remove", ignore_errors=True)

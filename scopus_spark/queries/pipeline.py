@@ -1706,7 +1706,7 @@ def j37_cosine_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact cosine, so the Lloyd fit + interpreted per-row assignment
     # were computed-then-pruned work. Output is oracle-identical.
     _ = row_count_estimate
-    return similarity.threshold_pair_join(base, None, tau=0.99)
+    return similarity.threshold_pair_join(base, tau=0.99)
 
 
 # --- j38: bigram language-model perplexity scoring (statistical quality filter) ------
@@ -2183,7 +2183,7 @@ def j43_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r10: no IVF fit / cell assignment — the j37 rationale (grid-keyed
     # enumeration + exact verify make the fit computed-then-pruned work)
     _ = row_count_estimate
-    pairs = similarity.threshold_pair_join(base, None, tau=0.99)
+    pairs = similarity.threshold_pair_join(base, tau=0.99)
 
     comp = connected_components(
         pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))

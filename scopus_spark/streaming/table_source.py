@@ -47,11 +47,11 @@ the churn, not the corpus.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scopus_spark.operators import tablefs
 from scopus_spark.operators.manifest import VersionedTable
 
 _MARKER = "_versioned_source_version"
@@ -74,13 +74,8 @@ class _VersionMarker:
             return 0
 
     def write(self, version: int) -> None:
-        os.makedirs(os.path.dirname(self._path), exist_ok=True)
-        tmp = f"{self._path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._path)
+        tablefs.makedirs(os.path.dirname(self._path), "marker.mkdir")
+        tablefs.write_atomic(self._path, str(version), "marker.write")
 
 
 class AppendStreamSource:

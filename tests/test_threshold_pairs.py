@@ -61,7 +61,7 @@ def _fast_pairs(df, tau, n_cells):
     base = similarity.prepare_vectors(df)
     cents = similarity._refine_centroids(base, n_cells).persist()
     assigned = similarity.assign_cells(base, cents)
-    return similarity.threshold_pair_join(assigned, cents, tau=tau)
+    return similarity.threshold_pair_join(assigned, tau=tau)
 
 
 @pytest.mark.parametrize("tau", [0.9, 0.99])
@@ -125,22 +125,21 @@ def test_cell_pair_pruning_bites_on_clustered_data(spark):
     assert kept < total_unordered / 2, (kept, total_unordered)
 
 
-def test_j37_plan_no_corpus_cartesian(spark, sf_dir):
+def test_j37_plan_no_corpus_cartesian(spark, sf_dir, monkeypatch):
     # the returned frame filters a lazily-checkpointed scored stream
     # (r11: single-compile cosine), so the visible plan stops at the
     # LogicalRDD; assert no cartesian there…
-    plan = _plan(QUERIES["j37"](spark, sf_dir))
+    j37 = QUERIES["j37"](spark, sf_dir)
+    plan = _plan(j37)
     assert "CartesianProduct" not in plan, plan
-    # …and assert the join architecture on the TRANSPARENT plan the
-    # operator exposes for exactly this audit (checkpoint_scored=False).
-    from scopus_spark.catalog import table
-
-    base = similarity.prepare_vectors(table(spark, sf_dir, "embeddings"))
-    inner = _plan(
-        similarity.threshold_pair_join(
-            base, None, tau=0.99, checkpoint_scored=False
-        )
-    )
+    # …and assert the join architecture on the TRANSPARENT plan of the
+    # same registered query, built with localCheckpoint as the identity
+    # so the checkpoint does not hide the join tree from explain (patched
+    # on the session's concrete DataFrame class, which overrides it).
+    with monkeypatch.context() as mp:
+        mp.setattr(type(j37), "localCheckpoint", lambda self, *a, **kw: self)
+        transparent = QUERIES["j37"](spark, sf_dir)
+    inner = _plan(transparent)
     assert "CartesianProduct" not in inner, inner
     # corpus-scale joins are hash equi-joins on cell ids; the only
     # nested-loop joins are the broadcast centroid-row / cell-pair bounds.
