@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scopus_spark import execution
 from scopus_spark.operators.text import hash60, word_shingles
 
 N_HASHES = 12
@@ -131,11 +132,14 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     Returns (doc_a, doc_b, n_shared_bands). The caller re-verifies with
     exact Jaccard (queries/llm.py j2) — LSH only prunes. Signatures come
-    from banded_signatures (codegen shape) and are pinned with
-    localCheckpoint so the self-join's two sides share ONE evaluation."""
-    banded = banded_signatures(docs, id_col, text_col).localCheckpoint(
-        eager=False
-    )
+    from banded_signatures (codegen shape) and are cut (execution.cut)
+    so the self-join's two sides and every later reader of the pairs
+    share ONE evaluation. The cut is not lazy: it runs the signature
+    pass when the frame is built."""
+    # Measured at sf0.1 (4 cores): with no barrier, sharing through
+    # ReusedExchange alone, n15 ran in 13.7 s against 6.5 s with the
+    # cut; with a pin, 21 s (65 jobs against 22).
+    banded = execution.cut(banded_signatures(docs, id_col, text_col))
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -192,18 +196,18 @@ def prefix_filter_pairs(
     shingle_df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ranked = sh.join(shingle_df, "shingle")
     # Global order = (df asc, shingle asc): deterministic, rarity-first.
-    # persist()-pinned (the banded_signatures lesson): docsets feeds
-    # THREE subtrees (the prefix explode and both verify sides), and each
-    # would otherwise re-run the whole shingle-explode -> df-count ->
-    # join -> per-doc sort pipeline — measured r10 at sf0.1, the j2 plan
-    # carried 30 Exchanges (3 evaluations) before pinning.
-    docsets = ranked.groupBy("doc_id").agg(
+    # pinned: docsets feeds THREE subtrees (the prefix explode and both
+    # verify sides), and each would otherwise re-run the whole
+    # shingle-explode -> df-count -> join -> per-doc sort pipeline —
+    # measured r10 at sf0.1, the j2 plan carried 30 Exchanges
+    # (3 evaluations) before pinning.
+    docsets = execution.pin(ranked.groupBy("doc_id").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("df", "shingle"))),
             lambda s: s.shingle,
         ).alias("sh_sorted"),
         F.count(F.lit(1)).alias("n_sh"),
-    ).persist()
+    ))
     prefix_len = (
         F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
     ).cast("int")
@@ -348,12 +352,10 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
     LSH on 15-bit bands (a pair within hamming 3 of 60 bits must agree on
     >=1 band; wider hamming uses more bands/permutations at scale); each
     band match is verified with an exact bit_count(xor). Fingerprints
-    come from simhash_df (codegen shape) pinned with localCheckpoint so
-    the band self-join's two sides share one evaluation."""
-    withfp = simhash_df(docs, id_col, text_col).localCheckpoint(
-        eager=False
-    )
-    banded = withfp.select(
+    come from simhash_df (codegen shape) and are cut (execution.cut) so
+    the band self-join's two sides and every later reader share one
+    evaluation; like lsh_candidate_pairs, the build runs the pass."""
+    banded = execution.cut(simhash_df(docs, id_col, text_col)).select(
         "doc_id", "fp", F.posexplode(simhash_bands(F.col("fp"))).alias("band_no", "band_val")
     )
     a = banded.alias("a")
@@ -415,15 +417,15 @@ def containment_pairs(
     )
     shingle_df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ranked = sh.join(shingle_df, "shingle")
-    # persist()-pinned (the prefix_filter_pairs rationale): docsets feeds
+    # pinned (the prefix_filter_pairs rationale): docsets feeds
     # FOUR subtrees here (prefix, postings, both verify sides)
-    docsets = ranked.groupBy("doc_id").agg(
+    docsets = execution.pin(ranked.groupBy("doc_id").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("df", "shingle"))),
             lambda s: s.shingle,
         ).alias("sh_sorted"),
         F.count(F.lit(1)).alias("n_sh"),
-    ).persist()
+    ))
     # src prefix: the first |A| - ceil(t*|A|) + 1 rarity-sorted shingles.
     prefix_len = (
         F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1

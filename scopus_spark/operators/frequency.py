@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scopus_spark import execution
+
 
 def exact_heavy_hitters(
     words: DataFrame, k: int = 64, col: str = "w"
@@ -80,13 +82,13 @@ def exact_heavy_hitters(
             )
 
     # Distributed merge of the partition summaries: <= parts x (k+1)
-    # rows in, one map-side-combinable sum out. localCheckpoint pins the
-    # sketch pass so the total and the top-(k+1) read ONE materialization.
-    merged = (
+    # rows in, one map-side-combinable sum out. The cut materializes the
+    # sketch pass once so the total and the top-(k+1) read ONE evaluation.
+    merged = execution.cut(
         src.mapInPandas(mg_partial, "w string, cnt long")
         .groupBy("w")
-        .agg(F.sum("cnt").alias("cnt"))
-        .localCheckpoint()
+        .agg(F.sum("cnt").alias("cnt")),
+        eager=True,
     )
     n_words = int(
         merged.filter(F.col("w").isNull())
@@ -141,7 +143,7 @@ def exact_median(
     (below-bracket mass and bracket size), then a two-level rank over
     ONLY the bracket rows (range partition -> local row_number +
     broadcast partition-size ledger — f4's trick, no single-task
-    window; the ranged bracket is localCheckpoint-pinned so the ledger
+    window; the ranged bracket is cut (execution.cut) so the ledger
     and the rank stream can never observe different partition
     boundaries): the global k-th smallest is the (k - c_lo)-th smallest
     in the bracket.
@@ -181,15 +183,15 @@ def exact_median(
             f"median bracket missed: c_lo={c_lo} n_br={n_br} k=({k1},{k2})"
         )
     br = li.filter((F.col("v") >= lo) & (F.col("v") <= hi))
-    # localCheckpoint PINS the range boundaries: the offsets ledger and
+    # The cut fixes the range boundaries: the offsets ledger and
     # the row_number stream both read this materialization, so the two
     # consumers can never see different RangePartitioner samples (the
     # silent-wrong-median hazard if exchange reuse were disabled). The
     # bracket is O(n/accuracy) rows — cheap to materialize by design.
-    ranged = (
+    ranged = execution.cut(
         br.repartitionByRange(n_range_parts, F.col("v"))
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+        .withColumn("pid", F.spark_partition_id()),
+        eager=True,
     )
     sizes = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
     offsets = sizes.select(

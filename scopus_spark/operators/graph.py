@@ -19,8 +19,9 @@ The pointer-jump step halves label-chain lengths, so convergence is
 O(log diameter) iterations instead of O(diameter) — on a 1000-executor
 cluster against a 100 TB edge set that is the difference between ~6 and
 ~hundreds of shuffle rounds. Each iteration is two shuffles (one on node,
-one on label); labels are localCheckpoint()ed each round to cut lineage
-(without it the plan doubles per iteration and planning time explodes).
+one on label); labels are cut (``execution.cut``) each round to bound
+lineage (without it the plan doubles per iteration and planning time
+explodes).
 
 All of it is driver-side *control flow* only — every data operation is a
 distributed DataFrame op; the only driver materialization is the O(1)
@@ -31,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from scopus_spark import execution
 
 
 # Edge-count bound below which the iterative graph operators run their
@@ -44,6 +47,16 @@ from pyspark.sql import functions as F
 # the switch only fires after a count() of the realized edge list. Same
 # pattern as manifest.FOOTER_DRIVER_FILES and execution.spread.
 DRIVER_EDGES = 200_000
+
+# Rounds between lineage cuts in the fixed-round loops (pagerank,
+# label_propagation). Under AQE each cut runs that round's shuffle
+# stages as separate jobs at build time (r10: 71 jobs and 13.6 s of
+# build for 5 pagerank rounds at sf0.1 with a cut every round, against
+# 22 jobs with none, output bit-identical), so the engine's fixed
+# 5-round keys (n6/n16) never cut mid-loop, while longer runs stay
+# plan-depth-bounded: past about a dozen unrolled rounds Catalyst
+# planning time explodes.
+ROUNDS_PER_CUT = 8
 
 
 def undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -120,7 +133,7 @@ def connected_components(
     governs the distributed loop (the driver path has no convergence
     failure mode).
     """
-    # hash-partitioned on src BEFORE the persist: the cached partitioning
+    # hash-partitioned on src BEFORE the pin: the cached partitioning
     # satisfies both the initial groupBy(src) and EVERY iteration's
     # neighbor join (InMemoryRelation preserves outputPartitioning), so
     # the edge list — the largest table in the loop — is exchanged once
@@ -130,19 +143,22 @@ def connected_components(
     # adds no second exchange.
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-    und = fwd.union(rev).repartition(F.col("src")).distinct().persist()
-    try:
-        n_edges = und.count()  # materializes the persist either way
+    with execution.scope():
+        und = execution.pin(
+            fwd.union(rev).repartition(F.col("src")).distinct()
+        )
+        n_edges = und.count()  # materializes the pin either way
         if n_edges <= driver_edge_threshold:
             # bounded: <= driver_edge_threshold symmetrized edge rows
             node_t = dict(und.dtypes)["src"]
             rows = [(r[0], r[1]) for r in und.collect()]
             return _cc_driver(rows, node_t, edges.sparkSession)
         # comp starts as each node's min direct neighbor (or itself).
-        labels = (
-            und.groupBy(F.col("src").alias("node"))
-            .agg(F.least(F.min("dst"), F.first("src")).alias("comp"))
-            .localCheckpoint()
+        labels = execution.cut(
+            und.groupBy(F.col("src").alias("node")).agg(
+                F.least(F.min("dst"), F.first("src")).alias("comp")
+            ),
+            eager=True,
         )
         # Convergence probe: per-node comp is MONOTONE NON-INCREASING
         # (min-propagation, and the pointer jump replaces comp by its
@@ -182,13 +198,13 @@ def connected_components(
             parent = stepped.select(
                 F.col("node").alias("p_node"), F.col("comp").alias("p_comp")
             )
-            jumped = (
+            jumped = execution.cut(
                 stepped.join(parent, stepped.comp == parent.p_node, "left")
                 .select(
                     "node",
                     F.coalesce(F.col("p_comp"), F.col("comp")).alias("comp"),
-                )
-                .localCheckpoint()
+                ),
+                eager=True,
             )
             if numeric:
                 new_sum = label_sum(jumped)
@@ -208,8 +224,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} iterations"
         )
-    finally:
-        und.unpersist()
 
 
 def label_propagation(
@@ -217,7 +231,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """(node, community) via SYNCHRONOUS label propagation (Raghavan et
     al. 2007) with a deterministic tie-break: every node starts labeled
@@ -232,10 +245,9 @@ def label_propagation(
     against the (node, label) table on the neighbor key, one hash
     aggregate to (node, label) counts, one node-partitioned window for
     the argmax — all shuffles keyed on node ids, no driver
-    materialization; labels are localCheckpoint-pinned every
-    ``checkpoint_every`` rounds so plan depth stays bounded without
-    paying a per-round stage materialization (r10 — see the pagerank
-    cadence note). Fixed `rounds` (not convergence-tested) keeps the
+    materialization; labels are cut every ROUNDS_PER_CUT rounds so plan
+    depth stays bounded without paying a per-round stage
+    materialization. Fixed `rounds` (not convergence-tested) keeps the
     job count static — LPA oscillates on bipartite structures, so
     production runs cap rounds anyway."""
     from pyspark.sql.window import Window
@@ -258,14 +270,8 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", "label")
         )
-        # same cadence rationale as pagerank (r10): fixed small
-        # round counts never need a mid-loop lineage cut.
-        if (
-            checkpoint_every
-            and (_rd + 1) % checkpoint_every == 0
-            and (_rd + 1) < rounds
-        ):
-            labels = labels.localCheckpoint(eager=False)
+        if (_rd + 1) % ROUNDS_PER_CUT == 0 and (_rd + 1) < rounds:
+            labels = execution.cut(labels)
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -308,15 +314,15 @@ def bfs_hops(
     citation graph runs from a seed paper).
 
     Each round: join the current frontier to the edge list, keep nodes not
-    yet visited, localCheckpoint. Rounds = eccentricity of the seed; each
+    yet visited, cut. Rounds = eccentricity of the seed; each
     is one shuffle-join on node. Deterministic — hop counts don't depend
     on partitioning or visit order. BFS on a finite graph terminates when
     the frontier empties, so there is NO default iteration cap (a cap
     silently truncates hop counts on long-diameter graphs); pass
     max_iterations only as a watchdog, which raises rather than truncates.
     """
-    und = undirected(edges, src, dst).persist()
-    try:
+    with execution.scope():
+        und = execution.pin(undirected(edges, src, dst))
         spark = edges.sparkSession
         # Seed typed from the edge schema, not hardcoded: string/int node
         # ids must survive the frontier joins.
@@ -334,10 +340,10 @@ def bfs_hops(
                 .select(F.col("dst").alias("node"))
                 .distinct()
             )
-            frontier = (
+            frontier = execution.cut(
                 neighbors.join(visited.select("node"), "node", "left_anti")
-                .select("node", F.lit(hop).cast("long").alias("hops"))
-                .localCheckpoint()
+                .select("node", F.lit(hop).cast("long").alias("hops")),
+                eager=True,
             )
             if frontier.limit(1).count() == 0:
                 return visited
@@ -346,9 +352,7 @@ def bfs_hops(
             # a frontier still producing nodes past the budget raises.
             if max_iterations is not None and hop > max_iterations:
                 raise RuntimeError(f"bfs_hops exceeded {max_iterations} iterations")
-            visited = visited.union(frontier).localCheckpoint()
-    finally:
-        und.unpersist()
+            visited = execution.cut(visited.union(frontier), eager=True)
 
 
 def pagerank(
@@ -359,7 +363,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 5,
     seeds: DataFrame | None = None,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Fixed-iteration PageRank (damping 0.85, leak variant: dangling mass
     is not redistributed) — the canonical iterative graph ranking.
@@ -371,18 +374,9 @@ def pagerank(
     centrality. Same per-round plan, same decimal-exact contribution
     sums; the seed flag rides the roster as a broadcast-joined column.
 
-    ``checkpoint_every`` (r10, measured): the round-5 shape
-    localCheckpoint()ed EVERY round, and under AQE each checkpoint
-    materializes that round's shuffle stages as separate jobs — 71 jobs
-    and 13.6 s of eager construction for 5 rounds at sf0.1, against
-    0.6 s construct + 4.8 s execute and 22 jobs with no mid-loop
-    checkpoint, output BIT-IDENTICAL (checkpoint placement never touches
-    the value expression tree; the A/B equality run is recorded in
-    OPTIMIZATION_r10.md). Lineage still must not grow unboundedly — past
-    ~a dozen unrolled rounds Catalyst planning time explodes — so the
-    loop checkpoints every ``checkpoint_every`` rounds: the default 8
-    means the engine's fixed 5-round keys (n6/n16) never pay a mid-loop
-    checkpoint while long custom runs stay plan-depth-bounded.
+    Ranks are cut every ROUNDS_PER_CUT rounds (see that constant), so
+    plan depth stays bounded; the cut placement never touches the value
+    expression tree (the A/B equality run is in OPTIMIZATION_r10.md).
 
     Determinism across engines (the reason this can be HASH-checked at
     all): every per-row step is double arithmetic with an identical
@@ -393,26 +387,13 @@ def pagerank(
     edges with ranks on src + one hash aggregate on dst + a left join back
     to the node roster; the node count rides along as a broadcast 1-row
     aggregate (no driver-side count()). At 100 TB: ranks re-shuffle on the
-    same node key every round (co-partition with the edge list), and each
-    round localCheckpoints like connected_components above — plan depth
-    stays O(1) in iters instead of unrolling iters joins+aggs into one
-    lineage (a plan-depth bomb past a handful of rounds).
+    same node key every round (co-partition with the edge list).
 
-    Honesty correction (round 7, measured): the round-5 claim that
-    eager=False makes construction schedule zero jobs was WRONG.
-    localCheckpoint — eager or not — builds the checkpoint RDD via
-    queryExecution.toRdd, and under AQE that materializes the prior
-    round's shuffle stages, so constructing this DataFrame runs the
-    iteration jobs up front (~58 jobs for 5 rounds at sf0.001) and the
-    returned plan then executes in milliseconds. That cost is inherent to
-    mid-lineage checkpointing, paid exactly once, and equals work the
-    first action would have done anyway — but it is NOT lazy, and code
-    that must stay action-free at plan-build time (the j31 contract)
-    cannot use localCheckpoint at all; it uses persist() + footer-count
-    metadata instead (queries/pipeline.py::j31_knn_join). Note for
-    production runs with executor churn: localCheckpoint blocks are not
-    fault-tolerant; swap in reliable `checkpoint()` (HDFS/S3 dir) when an
-    executor loss mid-run must be recoverable.
+    A cut is not lazy (execution module docstring): with a mid-loop
+    cut, constructing this DataFrame runs the earlier rounds' jobs. Note
+    for production runs with executor churn: cut blocks are not
+    fault-tolerant; a reliable ``checkpoint()`` (HDFS/S3 dir) is the
+    swap when an executor loss mid-run must be recoverable.
     """
     ncnt = nodes.agg(F.count(F.lit(1)).alias("n_docs"))
     roster = (
@@ -478,12 +459,8 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        if (
-            checkpoint_every
-            and (_it + 1) % checkpoint_every == 0
-            and (_it + 1) < iters
-        ):
-            ranks = ranks.localCheckpoint(eager=False)
+        if (_it + 1) % ROUNDS_PER_CUT == 0 and (_it + 1) < iters:
+            ranks = execution.cut(ranks)
     return ranks.select("node", F.col("r").alias("pagerank"))
 
 
@@ -580,19 +557,18 @@ def coreness(
     emptiness probes are driver-side control flow, inherent to any
     data-dependent iteration. Callers that need a lazy handle should
     persist the returned label table and hand that out (j31's
-    persisted-index pattern). Lineage is cut per round with
-    localCheckpoint (swap for checkpoint() on a real cluster for
-    executor-loss tolerance).
+    persisted-index pattern). Lineage is cut per round (execution.cut;
+    swap for checkpoint() on a real cluster for executor-loss
+    tolerance).
     """
     # Self-loops carry no k-core information (a loop cannot keep a node
     # in any core) and counting them would skew phase-1 degrees against
     # phase-2's loop-free local peel — drop them once, up front. A node
     # whose only incidences are self-loops is treated as isolated
     # (excluded, matching the brute-force contract in test_coreness).
-    live = (
-        undirected(edges, src, dst)
-        .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint()
+    live = execution.cut(
+        undirected(edges, src, dst).filter(F.col("src") != F.col("dst")),
+        eager=True,
     )
     node_t = dict(live.dtypes)["src"]
     spark = edges.sparkSession
@@ -621,7 +597,7 @@ def coreness(
     # was peeled away still exists (degree 0) and must receive a label —
     # reading degrees off the edge table alone would silently drop it.
     nodes = live.select("src").distinct().select(F.col("src").alias("node"))
-    nodes = nodes.localCheckpoint()
+    nodes = execution.cut(nodes, eager=True)
     wave_labels: list[DataFrame] = []
     k = 1
     drained = False
@@ -643,12 +619,12 @@ def coreness(
         # degree-aggregate + anti-join pipeline, and the checkpoint then
         # evaluated it AGAIN; pinned first, the probe reads cached
         # partitions for free.
-        low = (
+        low = execution.cut(
             nodes.join(deg, nodes.node == deg.node_d, "left")
             .select("node", F.coalesce(F.col("deg"), F.lit(0)).alias("deg"))
             .filter(F.col("deg") < k)
-            .select("node")
-            .localCheckpoint()
+            .select("node"),
+            eager=True,
         )
         if low.limit(1).count() == 0:
             k += 1
@@ -656,11 +632,13 @@ def coreness(
         wave_labels.append(
             low.select("node", F.lit(k - 1).cast("long").alias("coreness"))
         )
-        nodes = nodes.join(low, "node", "left_anti").localCheckpoint()
-        live = (
+        nodes = execution.cut(
+            nodes.join(low, "node", "left_anti"), eager=True
+        )
+        live = execution.cut(
             live.join(low, live.src == low.node, "left_anti")
-            .join(low, F.col("dst") == low.node, "left_anti")
-            .localCheckpoint()
+            .join(low, F.col("dst") == low.node, "left_anti"),
+            eager=True,
         )
     if not drained and nodes.limit(1).count() > 0:
         floor = k - 1

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scopus_spark import execution
 from scopus_spark.operators.manifest import VersionedTable
 
 STATE_COLS = [
@@ -130,10 +131,10 @@ def incremental_ohlc_state(target_path: str, delta_state: DataFrame) -> None:
     # re-ran the whole upstream (events window-dedup + OHLC aggregate)
     # once for the touched-partition collect, again inside merge()'s own
     # touched collect, and a third time for the commit write. The state
-    # is one row per (user, bucket) of ONE batch — bounded; unpersisted
+    # is one row per (user, bucket) of ONE batch — bounded; released
     # before returning, so nothing outlives the merge.
-    delta = delta_state.persist()
-    try:
+    with execution.scope():
+        delta = execution.pin(delta_state)
         vt = VersionedTable(target_path)
         if not vt.exists():
             vt.write_initial(delta, "bucket_date")
@@ -152,17 +153,12 @@ def incremental_ohlc_state(target_path: str, delta_state: DataFrame) -> None:
         # re-run the merge_states aggregate + the pruned existing read.
         # Bounded like `delta`: one row per (user, bucket) of the
         # touched partitions.
-        merged = merge_states(existing.select(*STATE_COLS), delta).persist()
-        try:
-            vt.merge(
-                merged,
-                key_cols=["user_id", "bucket_ts"],
-                partition_col="bucket_date",
-            )
-        finally:
-            merged.unpersist()
-    finally:
-        delta.unpersist()
+        merged = execution.pin(merge_states(existing.select(*STATE_COLS), delta))
+        vt.merge(
+            merged,
+            key_cols=["user_id", "bucket_ts"],
+            partition_col="bucket_date",
+        )
 
 
 def read_rollup(spark, target_path: str) -> DataFrame:

@@ -29,25 +29,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def pin_partitions(spark) -> int:
-    """Partition count for the explicit pins on byte-tiny / CPU-heavy
-    JVM candidate streams (similarity candidates, the j-pair join, the
-    a21 writes): ``max(defaultParallelism,
-    spark.sql.shuffle.partitions)``. A JVM task costs milliseconds, so
-    these pins may run several waves; the floor at the configured
-    shuffle width never downsizes a wide stream at scale, where a
-    stream can need more partitions than cores for memory/spill
-    reasons (guide §5). Python-worker stages do NOT use this pin: each
-    Python task pays a fixed worker-side cost, so they follow the one
-    width rule of execution.spread (one wave, and only when the input
-    has fewer splits than cores). Tested at a simulated high width in
-    tests/test_properties.py."""
-    try:
-        conf_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        conf_width = 0  # e.g. vendor-specific "auto" — fall back to cores
-    return max(spark.sparkContext.defaultParallelism, conf_width)
+from scopus_spark import execution
 
 
 def auto_n_cells(n_vectors: int) -> int:
@@ -59,12 +41,23 @@ def auto_n_cells(n_vectors: int) -> int:
     return max(4, min(4096, math.isqrt(max(n_vectors, 1))))
 
 
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns: a left fold from 0.0."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
+    )
+
+
+def norm(c: Column) -> Column:
+    """L2 norm of an array<double> column."""
+    return F.sqrt(
+        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
+    )
+
+
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<double> columns (JVM higher-order fns)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    n1 = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    n2 = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    return dot / (n1 * n2)
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def as_double(col: str | Column = "embedding") -> Column:
@@ -80,11 +73,7 @@ def _centroid_row(embeddings: DataFrame, n_cells: int) -> DataFrame:
     makes every per-vector cell computation a map-side array expression
     after a 1-row broadcast nested-loop join (no shuffle, no groupBy).
     """
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(as_double(), lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-        )
-    )
+    nrm = norm(as_double())
     return (
         embeddings.orderBy("vec_id")
         .limit(n_cells)
@@ -97,14 +86,8 @@ def _centroid_row(embeddings: DataFrame, n_cells: int) -> DataFrame:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-
-
 def _dot_sql(a: str, b: str, width: int = 64) -> Column:
-    """The _dot fold with a WHOLE-STAGE-CODEGEN fast path for the
+    """The dot fold with a WHOLE-STAGE-CODEGEN fast path for the
     corpus's fixed vector width (FIXTURES.md: 64-dim, all rows).
 
     r10 (guide §1.2 step 2): higher-order functions are CodegenFallback —
@@ -170,16 +153,12 @@ def ivf_assign(embeddings: DataFrame, n_cells: int = 16) -> DataFrame:
     Tie-break: highest sim, then lowest cell_id (struct compare on
     (sim, -cell_id)), identical to the previous semantics.
     """
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(as_double(), lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-        )
-    )
+    nrm = norm(as_double())
     scored = embeddings.crossJoin(F.broadcast(_centroid_row(embeddings, n_cells)))
     sims = F.transform(
         F.col("cells"),
         lambda c: F.struct(
-            F.round(_dot(as_double(), c["centroid"]) / (nrm * c["cnrm"]), 6).alias(
+            F.round(dot(as_double(), c["centroid"]) / (nrm * c["cnrm"]), 6).alias(
                 "sim"
             ),
             (-c["cell_id"]).alias("negid"),
@@ -220,8 +199,8 @@ def _refine_centroids(base: DataFrame, n_cells: int, iters: int = 2) -> DataFram
         # single core (UI: 1-task stages of seconds each). Pin the fit
         # input to the session's core count; the fit stream is the
         # (sampled) vector table, bounded by fit_centroids at scale.
-        # r11: max(cores, configured shuffle width) — see pin_partitions.
-        base = base.repartition(pin_partitions(base.sparkSession))
+        # r11: max(cores, configured shuffle width) — see execution.width.
+        base = base.repartition(execution.width(base.sparkSession))
     for _ in range(iters):
         cent_row = cents.agg(
             F.collect_list(F.struct("cell_id", "centroid", "cnrm")).alias("cells")
@@ -230,7 +209,7 @@ def _refine_centroids(base: DataFrame, n_cells: int, iters: int = 2) -> DataFram
             F.col("cells"),
             lambda c: F.struct(
                 (
-                    _dot(F.col("emb"), c["centroid"]) / (F.col("nrm") * c["cnrm"])
+                    dot(F.col("emb"), c["centroid"]) / (F.col("nrm") * c["cnrm"])
                 ).alias("sim"),
                 (-c["cell_id"]).alias("negid"),
                 c["cell_id"].alias("cell_id"),
@@ -239,13 +218,7 @@ def _refine_centroids(base: DataFrame, n_cells: int, iters: int = 2) -> DataFram
         assigned = base.crossJoin(F.broadcast(cent_row)).select(
             F.array_max(sims)["cell_id"].alias("cell_id"), "emb"
         )
-        mean_nrm = F.sqrt(
-            F.aggregate(
-                F.transform(F.col("mean"), lambda x: x * x),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-        )
+        mean_nrm = norm(F.col("mean"))
         means = (
             assigned.select("cell_id", F.posexplode("emb").alias("pos", "v"))
             .groupBy("cell_id", "pos")
@@ -318,8 +291,10 @@ def exact_1nn(
     if refine_iters > 0:
         # the refined centroid table is tiny (n_cells rows) but its lineage
         # holds refine_iters full-data aggregations and is consumed by three
-        # downstream subtrees — checkpoint so it is computed once.
-        cents = cents.localCheckpoint(eager=False)
+        # downstream subtrees — cut so it is computed once. Measured at
+        # sf0.01: a pin here ran 46 jobs against the cut's 30, and no
+        # barrier 27 jobs but 1.5x the wall.
+        cents = execution.cut(cents)
     assigned = assign_cells(base, cents)
     return exact_1nn_for(assigned, assigned, cents, eps=eps)
 
@@ -327,11 +302,7 @@ def exact_1nn(
 def prepare_vectors(embeddings: DataFrame) -> DataFrame:
     """(vec_id, label, emb array<double>, nrm) — the working shape every
     similarity operator consumes."""
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(as_double(), lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-        )
-    )
+    nrm = norm(as_double())
     return embeddings.select(
         "vec_id", "label", as_double().alias("emb"), nrm.alias("nrm")
     )
@@ -347,7 +318,7 @@ def assign_cells(base: DataFrame, cents: DataFrame) -> DataFrame:
     sims = F.transform(
         F.col("cells"),
         lambda c: F.struct(
-            (_dot(F.col("emb"), c["centroid"]) / (F.col("nrm") * c["cnrm"])).alias(
+            (dot(F.col("emb"), c["centroid"]) / (F.col("nrm") * c["cnrm"])).alias(
                 "sim"
             ),
             (-c["cell_id"]).alias("negid"),
@@ -401,22 +372,20 @@ def exact_topk_join(
 
     Returns (vec_id, nn_id, rank, cos_sim, label_match).
     """
-    # r10: pin the assignment inputs with a LAZY persist() — but ONLY in
-    # the two-sided (q != c) shape: there the corpus side is typically a
-    # stored-index union consumed by the slack aggregate + both candidate
-    # joins, and sharing one evaluation measured j28 28.3->15.8 s and
+    # r10: pin the assignment inputs — but ONLY in the two-sided (q != c)
+    # shape: there the corpus side is typically a stored-index union
+    # consumed by the slack aggregate + both candidate joins, and sharing one evaluation measured j28 28.3->15.8 s and
     # j31 15.5->11.3 s at sf0.1. In the self-join shape (exact_1nn,
     # q is c) the assignment is one narrow map-side subtree whose
     # re-evaluation is CHEAPER than the cache round-trips — persisting
-    # it measured j4 51->74 s — so it stays unpinned there. persist(),
-    # NOT localCheckpoint: plan construction must stay job-free (the
-    # j31 zero-jobs pin — AQE materializes stages when a shuffling plan
-    # is turned into an RDD), and a checkpointed branch inside the
-    # final union trips Catalyst's union-constraint rewrite.
+    # it measured j4 51->74 s — so it stays unpinned there. A pin, not
+    # a cut: plan construction must stay job-free (the j31 zero-jobs
+    # test), and a checkpointed branch inside the final union trips
+    # Catalyst's union-constraint rewrite.
     two_sided = q_assigned is not c_assigned
     if two_sided:
-        c_assigned = c_assigned.persist()
-        q_assigned = q_assigned.persist()
+        c_assigned = execution.pin(c_assigned)
+        q_assigned = execution.pin(q_assigned)
     assigned = c_assigned
     # r10 (guide §2.5): the candidate streams below carry little DATA but
     # heavy PER-ROW compute (Arrow pair scoring over |Q|·|C|/n_cells
@@ -424,10 +393,10 @@ def exact_topk_join(
     # bench scale (UI: one 2-task stage held 23 of j4's 39 s), so the
     # expensive map chains pin an EXPLICIT partition count — scale-
     # adaptive (r11: max(cores, configured shuffle width) so the pin can
-    # never DOWNSIZE a wide stream at scale — see pin_partitions), and an
+    # never DOWNSIZE a wide stream at scale — see execution.width), and an
     # explicit numPartitions exchange is exempt from AQE coalescing by
     # design.
-    par = pin_partitions(q_assigned.sparkSession)
+    par = execution.width(q_assigned.sparkSession)
     # per-cell radius in unit-sphere chord distance: ||p_hat - c_hat|| =
     # sqrt(2 - 2 cos(p, c)); greatest() guards FP dips below zero.
     slack = assigned.groupBy("cell_id").agg(
@@ -454,8 +423,8 @@ def exact_topk_join(
         6,
     )
     # phase-1 pairs feed the pruning threshold AND the final union;
-    # persist()-pinned in the two-sided shape only (same measurement as
-    # above: a win for the stored-index keys, a net cost for exact_1nn)
+    # pinned in the two-sided shape only (same measurement as above: a
+    # win for the stored-index keys, a net cost for exact_1nn)
     own_pairs = a.join(b, own_cond).select(
         F.col("a.vec_id").alias("vec_id"),
         F.col("a.label").alias("label_a"),
@@ -464,7 +433,7 @@ def exact_topk_join(
         pair_cos.alias("cos_sim"),
     )
     if two_sided:
-        own_pairs = own_pairs.persist()
+        own_pairs = execution.pin(own_pairs)
     from pyspark.sql import Window
 
     w = Window.partitionBy("vec_id").orderBy(
@@ -504,7 +473,7 @@ def exact_topk_join(
                     F.col("cells"),
                     lambda c: (c["cell_id"] != F.col("cell_id"))
                     & (
-                        _dot(F.col("emb"), c["centroid"]) / (F.col("nrm") * c["cnrm"])
+                        dot(F.col("emb"), c["centroid"]) / (F.col("nrm") * c["cnrm"])
                         + c["slack"]
                         >= F.col("bestk") - F.lit(eps)
                     ),
@@ -675,8 +644,8 @@ def threshold_pair_join(
     # subtrees below (both slim join sides, both fat verify sides) —
     # measured r10 at sf0.1, the j37 plan carried 88 Exchanges /
     # 21 SortMergeJoins (≈5 evaluations of the pipeline) before pinning.
-    # persist() (lazy), not localCheckpoint: keeps plan construction
-    # job-free under AQE. r10: persist ONLY (vec_id, emb, nrm) — pair
+    # A pin, not a cut: keeps plan construction job-free under AQE.
+    # r10: pin ONLY (vec_id, emb, nrm) — pair
     # enumeration is keyed on the projection grid and verify needs just
     # the vectors, so materializing the cell_id/cos_centroid columns
     # (the interpreted per-row x n_cells centroid transform) was pure
@@ -686,7 +655,7 @@ def threshold_pair_join(
     # it for enumeration: a dense cluster lands in one grid cell either
     # way, and the grid keeps pruning where cells are geometrically
     # blind.
-    assigned = assigned.select("vec_id", "emb", "nrm").persist()
+    assigned = execution.pin(assigned.select("vec_id", "emb", "nrm"))
 
     from functools import reduce as _reduce
     from itertools import product as _product
@@ -735,16 +704,16 @@ def threshold_pair_join(
     # for the exact d-dim cosine. n_key=5 spreads the key space ~8^5
     # ways, so the Gaussian pile-up of projections near 0 cannot
     # concentrate enumeration on a few straggler tasks.
-    # persist()-pinned: slim feeds both sides of the grid-key join, and
-    # its 9 interpreted projection aggregates per row would re-run per side
-    slim = assigned.select(
+    # pinned: slim feeds both sides of the grid-key join, and its 9
+    # interpreted projection aggregates per row would re-run per side
+    slim = execution.pin(assigned.select(
         "vec_id",
         *[
             F.floor(_tproj(j) / F.lit(delta)).cast("long").alias(f"_gb{j}")
             for j in range(n_key)
         ],
         *[_tproj(n_key + j).alias(f"_gt{j}") for j in range(n_guard)],
-    ).persist()
+    ))
     b = slim.alias("b")
     # per qualifying pair the band indices differ by at most 1 PER
     # PROJECTION, so probing all 3^n_key adjacent grid cells on one
@@ -826,30 +795,25 @@ def threshold_pair_join(
     # verify join + exact rescoring behind it is the operator's CPU
     # center; AQE's byte-based coalescing collapsed it onto 1-2 tasks at
     # bench scale. Pin an explicit scale-adaptive partition count
-    # (r11: max(cores, configured shuffle width) — see pin_partitions);
+    # (r11: max(cores, configured shuffle width) — see execution.width);
     # explicit numPartitions exchanges are exempt from AQE coalescing.
-    par = pin_partitions(cand.sparkSession)
-    # r11 (guide §1.2 step 2): score ONCE, filter behind a lazy
-    # localCheckpoint. A plain filter-after-project is re-merged by
-    # predicate pushdown into the last join's condition, so the 64-term
-    # rounded cosine was COMPILED twice (two giant generated methods —
-    # the one-shot cost of this operator is dominated by Janino/JIT of
-    # exactly these expressions) and re-evaluated for every survivor.
-    # The checkpoint is a plan barrier keeping ONE compiled copy and one
-    # evaluation per candidate, at the cost of materializing the scored
-    # candidate stream (3 scalars/row — slimmer than the exchange rows
-    # that stream already paid; fault-tolerance trade documented at the
-    # other localCheckpoint sites). Lazy: plan construction stays
-    # job-free. Measured: j43 one-shot 9.05 -> 6.58 s, j37 2.64 -> 2.37
-    # (noop write, idle, canonical order). In the checkpointed plan
-    # (plans/r11/j37_after.txt) the scored stream is one `Scan
-    # ExistingRDD`, which hides the join tree from explain.
-    scored = (
+    par = execution.width(cand.sparkSession)
+    # r11 (guide §1.2 step 2): score ONCE, filter behind a pin. A plain
+    # filter-after-project is re-merged by predicate pushdown into the
+    # last join's condition, so the 64-term rounded cosine was COMPILED
+    # twice (two giant generated methods — the one-shot cost of this
+    # operator is dominated by Janino/JIT of exactly these expressions)
+    # and re-evaluated for every survivor. The cached relation is a plan
+    # barrier keeping ONE compiled copy and one evaluation per candidate
+    # (3 scalars/row). A pin, not a cut: the stream is unbounded at
+    # scale, so it keeps its lineage and spills to disk, and the build
+    # runs no job. In the plan the scored stream is an
+    # `InMemoryTableScan` over the join tree.
+    scored = execution.pin(
         cand.repartition(par)
         .join(va, F.col("vec_a") == F.col("va.vec_id"))
         .join(vb, F.col("vec_b") == F.col("vb.vec_id"))
         .select("vec_a", "vec_b", pair_cos.alias("cos_sim"))
-        .localCheckpoint(eager=False)
     )
     return scored.filter(F.col("cos_sim") >= F.lit(tau))
 
@@ -1057,14 +1021,13 @@ def pq_fit(
                 ).alias("mean")
             )
         )
-        codebooks = (
-            codebooks.join(means, ["sub_id", "code"], "left")
-            .select(
+        codebooks = execution.cut(  # m*kc rows; caps per-round lineage
+            codebooks.join(means, ["sub_id", "code"], "left").select(
                 "sub_id",
                 "code",
                 F.coalesce("mean", "centroid").alias("centroid"),
-            )
-            .localCheckpoint()  # m*kc rows; caps per-round lineage
+            ),
+            eager=True,
         )
     return codebooks
 
@@ -1156,7 +1119,7 @@ def pq_topk(
         .limit(rerank)
     )
     qe = F.array(*[F.lit(float(x)) for x in qrow.emb])
-    cos = F.round(_dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(qrow.nrm))), 6)
+    cos = F.round(dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(qrow.nrm))), 6)
     ranked = (
         cand.select(
             "vec_id",
@@ -1213,7 +1176,7 @@ def nn_descent(
     node — O(n·k²) candidate volume per round, never O(n²); all joins
     are equi-joins on vec ids (shuffle-partitioned, AQE-splittable), and
     scoring is the same JVM fold every other similarity operator uses.
-    Each round's graph is localCheckpoint-pinned so plan depth stays
+    Each round's graph is cut (execution.cut) so plan depth stays
     O(1) in rounds. At 100 TB the published refinements apply unchanged
     (sample ρ·k of each neighborhood per round, mark-new-only): they
     bound candidate volume, not the join shape. Convergence on the
@@ -1246,11 +1209,12 @@ def nn_descent(
         )
     base = prepare_vectors(embeddings)
     cents = _refine_centroids(base, n_cells, iters=0)
-    # pin the cell assignment: its interpreted transform over the
+    # cut the cell assignment: its interpreted transform over the
     # broadcast centroid row would otherwise re-evaluate once for vecs
-    # and once per side of the cell_pairs self-join (the
-    # banded_signatures lesson)
-    assigned = assign_cells(base, cents).localCheckpoint(eager=False)
+    # and once per side of the cell_pairs self-join, in every round.
+    # Measured at sf0.01 (j49): 35 jobs with the cut, 63 with a pin,
+    # 50 with no barrier.
+    assigned = execution.cut(assign_cells(base, cents))
     vecs = assigned.select("vec_id", "emb", "nrm")
 
     # build with a wider internal degree, report only the top k: on
@@ -1300,7 +1264,7 @@ def nn_descent(
         # scoring it is the round's CPU center; pin scale-adaptive
         # parallelism so AQE's byte heuristic can't serialize it
         # (r11: bounded below by the configured shuffle width too).
-        par = pin_partitions(cand.sparkSession)
+        par = execution.width(cand.sparkSession)
         return (
             cand.repartition(par)
             .join(e1, "v")
@@ -1366,9 +1330,7 @@ def nn_descent(
         )
         .filter(F.col("v") != F.col("u"))
     )
-    g = _topk(_score(init.union(isolated).distinct())).localCheckpoint(
-        eager=False
-    )
+    g = execution.cut(_topk(_score(init.union(isolated).distinct())))
 
     for _ in range(rounds):
         edges = g.select("v", "u")
@@ -1382,7 +1344,7 @@ def nn_descent(
             .filter(F.col("v") != F.col("u"))
         )
         cand = two_hop.union(edges).distinct()
-        g = _topk(_score(cand)).localCheckpoint(eager=False)
+        g = execution.cut(_topk(_score(cand)))
 
     w_final = Window.partitionBy("v").orderBy(
         F.col("cos_sim").desc(), F.col("u").asc()
@@ -1434,7 +1396,7 @@ def graph_beam_search(
     ).collect()[0]
     qe = F.array(*[F.lit(float(x)) for x in qrow.emb])
     cos = (
-        F.round(_dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(qrow.nrm))), 6)
+        F.round(dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(qrow.nrm))), 6)
         + F.lit(0.0)
     )
     pool = base.filter(F.col("vec_id") != query_vec_id)
@@ -1447,12 +1409,12 @@ def graph_beam_search(
     edges = graph.select(
         F.col("vec_id").alias("src"), F.col("nn_id").alias("dst")
     )
-    sym = edges.union(
+    sym = execution.cut(edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct())
 
     entry = pool.orderBy("vec_id").limit(beam).select("vec_id")
-    visited = score(entry).localCheckpoint(eager=False)
+    visited = execution.cut(score(entry))
     for _ in range(hops):
         frontier = visited.orderBy(
             F.col("cos_sim").desc(), F.col("vec_id").asc()
@@ -1467,7 +1429,7 @@ def graph_beam_search(
             .distinct()
             .join(visited.select("vec_id"), "vec_id", "left_anti")
         )
-        visited = visited.union(score(new_ids)).localCheckpoint(eager=False)
+        visited = execution.cut(visited.union(score(new_ids)))
 
     w = Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return (
@@ -1567,7 +1529,7 @@ def graph_beam_search_stored(
     qe = F.array(*[F.lit(float(x)) for x in qrow.emb])
     cos = (
         F.round(
-            _dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(qrow.nrm))),
+            dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(qrow.nrm))),
             6,
         )
         + F.lit(0.0)
@@ -1580,7 +1542,7 @@ def graph_beam_search_stored(
         )
 
     entry = pool.orderBy("vec_id").limit(beam).select("vec_id")
-    visited = score(entry).localCheckpoint(eager=False)
+    visited = execution.cut(score(entry))
     for _ in range(hops):
         frontier_ids = [
             r.vec_id
@@ -1598,7 +1560,7 @@ def graph_beam_search_stored(
             .distinct()
             .join(visited.select("vec_id"), "vec_id", "left_anti")
         )
-        visited = visited.union(score(new_ids)).localCheckpoint(eager=False)
+        visited = execution.cut(visited.union(score(new_ids)))
 
     w = Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return (

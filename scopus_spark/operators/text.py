@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from scopus_spark import execution
+
 
 def tokens(text: str | Column) -> Column:
     """Whitespace tokens."""
@@ -176,7 +178,7 @@ def bpe_encode(
         enc = enc.select("w", apply_merge(F.col("tokens"), lt, rt, merged).alias("tokens"))
         if (i + 1) % 4 == 0:
             # cap nested-fold expression depth (the learn_bpe discipline)
-            enc = enc.localCheckpoint(eager=False)
+            enc = execution.cut(enc)
     return occurrences.join(enc, "w").select(
         "doc_id", "word_no", "w", "tokens"
     )
@@ -198,14 +200,14 @@ def learn_bpe(docs: DataFrame, text_col: str = "text", n_merges: int = 12) -> Da
     (count DESC, pair ASC — deterministic tie-break), then the merge
     applies as a pure map-side left-fold over each word's symbol array
     (JVM higher-order aggregate — greedy non-overlapping left-to-right,
-    the BPE contract). localCheckpoint(eager=False) per round caps the
+    the BPE contract). A cut per round (execution.cut) caps the
     nested-fold expression depth.
 
     CONSTRUCTION runs the merge loop (1-row collect per round — same
     adjudication as n12/pagerank/j45); production persists the learned
     merge table and applies it map-side.
     """
-    words = (
+    words = execution.cut(
         docs.select(
             F.explode(
                 F.split(F.lower(F.col(text_col)), "[^a-z]+")
@@ -215,7 +217,6 @@ def learn_bpe(docs: DataFrame, text_col: str = "text", n_merges: int = 12) -> Da
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(word_symbols("w").alias("syms"), "freq")
-        .localCheckpoint(eager=False)
     )
     spark = docs.sparkSession
     merges = []
@@ -246,9 +247,9 @@ def learn_bpe(docs: DataFrame, text_col: str = "text", n_merges: int = 12) -> Da
         best = pairs[0]
         lt, rt, merged = best.left, best.right, best.left + best.right
         merges.append((rank, lt, rt, merged, int(best.cnt)))
-        words = words.select(
+        words = execution.cut(words.select(
             apply_merge(F.col("syms"), lt, rt, merged).alias("syms"), "freq"
-        ).localCheckpoint(eager=False)
+        ))
     return spark.createDataFrame(
         merges,
         "merge_rank long, left string, right string, merged string, pair_count long",

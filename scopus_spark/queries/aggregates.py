@@ -1357,7 +1357,8 @@ def d32_exact_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE pass over the fact — the joint groupBy(segment, pri, st)
     counts (map-side partials, enum-bounded exchange of
-    |segments| x |domains| rows) are pinned and BOTH marginals
+    |segments| x |domains| rows) are shuffled once (every reader shares
+    the exchange through ReusedExchange) and BOTH marginals
     re-aggregate from those few joint rows (sum of joint counts = the
     marginal count, exactly); each mode is then a segment-partitioned
     top-1 window over a handful of rows. The customer dim broadcasts
@@ -1370,11 +1371,7 @@ def d32_exact_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("pri"),
         F.col("o_orderstatus").alias("st"),
     )
-    joint = (
-        j.groupBy("segment", "pri", "st")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    joint = j.groupBy("segment", "pri", "st").agg(F.count(F.lit(1)).alias("c"))
 
     def mode_of(cols: list[str], out_names: list[str]) -> DataFrame:
         w = Window.partitionBy("segment").orderBy(

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scopus_spark import etl
+from scopus_spark import etl, execution
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
 from scopus_spark.session import STAGE_ROOT
@@ -1021,12 +1021,12 @@ def a32_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 13 == 5).select("doc_id", "bucket"),
         key_cols=["doc_id"],
     )
-    # merge-on-read: pin the tombstone-anti-join read BEFORE vacuum
-    # reclaims the dirs its lazy plan references
-    mor = (
-        vt.read(spark)
-        .select("doc_id", F.md5("text").alias("content_hash"))
-        .localCheckpoint(eager=True)
+    # merge-on-read: cut the tombstone-anti-join read BEFORE vacuum
+    # reclaims the dirs its lazy plan references (a pin would recompute
+    # a lost partition from the deleted files)
+    mor = execution.cut(
+        vt.read(spark).select("doc_id", F.md5("text").alias("content_hash")),
+        eager=True,
     )
     vt.compact(spark)  # folds tombstones into plain files
     vt.vacuum(keep_last=1)

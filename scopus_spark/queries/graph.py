@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scopus_spark import execution
 from scopus_spark.catalog import spread_scan, table
 from scopus_spark.operators import dedup, graph
 from scopus_spark.queries.pipeline import J9_PAIRS_SQL, J11_PAIRS_SQL, J14_QUALITY_SQL
@@ -49,9 +50,13 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union of j9 + j11 pair signals as an (doc_a, doc_b) edge list.
 
     The pipeline (MinHash signatures + 60 nested SimHash folds per doc)
-    dominates each n-key's cost. It is built fresh on every call; a
-    consumer that reads the edges in more than one job pins them with
-    localCheckpoint(eager=False), which is freed with its frame."""
+    dominates each n-key's cost. It is built fresh on every call; the two
+    pair signals cut their signature passes (operators/dedup.py), so the
+    build runs those passes. A consumer that reads the edges in more than
+    one job cuts them too; every cut is released with the query's frame.
+    A pin measured worse at both places: its cached plan keeps the
+    configured 32-way shuffle width (Spark does not let AQE coalesce a
+    cached plan by default), so n12 ran 218 tasks against the cut's 31."""
     # r10: spread_scan — both pair signals run heavy per-doc map work
     d = spread_scan(spark, sf_dir, "documents")
     lsh = dedup.lsh_candidate_pairs(d).select("doc_a", "doc_b")
@@ -178,8 +183,8 @@ def n4_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     level (operators/graph.py); the oracle's recursive CTE explores
     (node, hops) pairs and min-reduces — same answer, oracle-scale
     algorithm."""
-    # pinned: the seed probe and the BFS rounds are separate jobs
-    edges = _dup_edges(spark, sf_dir).localCheckpoint(eager=False)
+    # cut: the seed probe and the BFS rounds are separate jobs
+    edges = execution.cut(_dup_edges(spark, sf_dir))
     seed = edges.agg(F.min(F.least("doc_a", "doc_b"))).collect()[0][0]
     return graph.bfs_hops(edges, seed, "doc_a", "doc_b")
 
@@ -805,8 +810,8 @@ def n12_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     in all but transport."""
     from scopus_spark.operators.graph import coreness, degrees
 
-    # pinned: coreness peels in its own jobs, degrees reads them again
-    edges = _dup_edges(spark, sf_dir).localCheckpoint(eager=False).select(
+    # cut: coreness peels in its own jobs, degrees reads them again
+    edges = execution.cut(_dup_edges(spark, sf_dir)).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     core = coreness(edges)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from scopus_spark.catalog import spread_scan, table
+from scopus_spark.operators.similarity import as_double, cosine, dot, norm
 from scopus_spark.queries import _fp
 from scopus_spark.registry import register
 
@@ -107,30 +108,6 @@ def j2_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_filter_pairs(d, threshold=_J2_SPARK_THRESHOLD)
 
 
-def _dot(emb_a, emb_b):
-    return F.aggregate(
-        F.zip_with(emb_a, emb_b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(e):
-    return F.sqrt(
-        F.aggregate(F.transform(e, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-
-
-def _cosine(emb_a, emb_b):
-    """Cosine similarity of two double-array columns via higher-order fns
-    (JVM-side, no UDF)."""
-    return _dot(emb_a, emb_b) / (_norm(emb_a) * _norm(emb_b))
-
-
-def _emb_double(col="embedding"):
-    return F.transform(F.col(col), lambda x: x.cast("double"))
-
-
 # --- j3: exact top-10 cosine neighbors of vec_id=0 -----------------------------
 @register(
     "j3",
@@ -153,15 +130,15 @@ def j3_vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by LSH bucket / IVF cell, then re-ranks with this exact cosine.
     """
     e = table(spark, sf_dir, "embeddings")
-    emb = _emb_double()
+    emb = as_double()
     # The query vector and its norm come from a 1-row frame broadcast into
     # the scan (the repo's bounded-crossJoin idiom): the lookup stays in
     # the plan, so building the frame runs no job, and the norm is taken
-    # once, not per row. Same expression order as _cosine.
+    # once, not per row. Same expression order as similarity.cosine.
     q = e.filter(F.col("vec_id") == 0).select(
-        emb.alias("qe"), _norm(emb).alias("qn")
+        emb.alias("qe"), norm(emb).alias("qn")
     )
-    cos = F.round(_dot(emb, F.col("qe")) / (_norm(emb) * F.col("qn")), 6)
+    cos = F.round(dot(emb, F.col("qe")) / (norm(emb) * F.col("qn")), 6)
     return (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -331,10 +308,8 @@ def j6_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j7_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
-    emb = _emb_double()
-    l2 = F.sqrt(
-        F.aggregate(F.transform(emb, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
+    emb = as_double()
+    l2 = norm(emb)
     return (
         e.select(
             "label",
@@ -442,9 +417,9 @@ def j41_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     scale = e.agg(
         F.max(
-            F.array_max(F.transform(_emb_double(), lambda x: F.abs(x)))
+            F.array_max(F.transform(as_double(), lambda x: F.abs(x)))
         ).alias("mx"),
-        F.max(F.when(F.col("vec_id") == 0, _emb_double())).alias("qe"),
+        F.max(F.when(F.col("vec_id") == 0, as_double())).alias("qe"),
     )
 
     def _quant(arr):
@@ -458,11 +433,11 @@ def j41_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            _emb_double().alias("emb"),
+            as_double().alias("emb"),
             "qe",
             F.aggregate(
                 F.zip_with(
-                    _quant(_emb_double()), _quant(F.col("qe")), lambda a, b: a * b
+                    _quant(as_double()), _quant(F.col("qe")), lambda a, b: a * b
                 ),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
@@ -476,7 +451,7 @@ def j41_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "qdot",
-            F.round(_cosine(F.col("emb"), F.col("qe")), 6).alias("cos_sim"),
+            F.round(cosine(F.col("emb"), F.col("qe")), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
         .limit(10)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scopus_spark import execution
 from scopus_spark.catalog import spread_scan, table
 from scopus_spark.operators import dedup, multimodal, similarity
 from scopus_spark.operators.text import LANG_MARKERS, char_shingles, lang_score, tokens
@@ -159,24 +160,17 @@ def j12_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     # per-vector norm precomputed once (see j4) — halves per-pair array work
     emb = similarity.as_double()
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(emb, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
+    en = e.select(
+        "vec_id", "label", emb.alias("emb"), similarity.norm(emb).alias("nrm")
     )
-    en = e.select("vec_id", "label", emb.alias("emb"), norm.alias("nrm"))
     a, b = en.alias("a"), en.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.emb"), F.col("b.emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = similarity.dot(F.col("a.emb"), F.col("b.emb"))
     cos = F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 6)
     # r10 (guide §2.5): the pair join's left side inherits the one-split
     # corpus scan, so the whole n^2/2 scoring stream ran on 1-2 tasks
     # under AQE byte-coalescing; pin scale-adaptive parallelism
     # (r11: bounded below by the configured shuffle width too).
-    par = similarity.pin_partitions(spark)
+    par = execution.width(spark)
     return (
         a.repartition(par)
         .join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -856,7 +850,7 @@ def j25_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 7: the band table is a snapshot-isolated VersionedTable
     (operators/manifest.py). Data files are immutable and the MERGE
     commits by atomic pointer swap, so the lazy pair plan reads the
-    pinned pre-merge snapshot WITHOUT the eager localCheckpoint the
+    pinned pre-merge snapshot WITHOUT the eager cut the
     stage-and-swap layout needed (the r5 'j25 lesson' materialization) —
     one less full copy of the stored bands per batch."""
     import os
@@ -889,15 +883,11 @@ def j25_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vt = VersionedTable(target)
     vt.write_initial(banded(existing), "doc_bkt")
 
-    # persist()-pinned: the batch's band signatures feed THREE
-    # subtrees (probe join side, the stored∪probe build side, and the
-    # maintenance MERGE below) — each would otherwise re-run the full
-    # shingle-explode MinHash pipeline over the batch (r10 measure)
-    probe = (
-        banded(batch)
-        .withColumn("is_old", F.lit(False))
-        .persist()
-    )
+    # pinned: the batch's band signatures feed THREE subtrees (probe
+    # join side, the stored∪probe build side, and the maintenance MERGE
+    # below) — each would otherwise re-run the full shingle-explode
+    # MinHash pipeline over the batch (r10 measure)
+    probe = execution.pin(banded(batch).withColumn("is_old", F.lit(False)))
     # snapshot-pinned read: the maintenance MERGE below only ADDS data
     # files and swaps the manifest pointer, so this lazy frame keeps
     # reading the pre-merge snapshot — no eager checkpoint required
@@ -1339,11 +1329,10 @@ def j31_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet footer's row count (driver-side catalog metadata — even a
     # column-pruned df.count() is a job) scaled by the split fraction;
     # exactness never depends on n_cells, so the 0.9 estimate is safe.
-    # The centroid table uses a LAZY persist, not localCheckpoint: under
-    # AQE, localCheckpoint(eager=False) still builds the RDD, which
-    # materializes the refine lineage's shuffle stages at plan-build
-    # time (8 jobs); persist() defers everything to the first action and
-    # still computes the three-subtree-shared centroids exactly once.
+    # The centroid table is a pin, not a cut: a cut runs the refine
+    # lineage's shuffle stages at plan-build time (8 jobs); a pin defers
+    # everything to the first action and still computes the
+    # three-subtree-shared centroids exactly once.
     base_c = similarity.prepare_vectors(corpus)
     from scopus_spark.catalog import row_count_estimate
 
@@ -1352,7 +1341,7 @@ def j31_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r10: sampled Lloyd fit (exactness is centroid-independent; the
     # full-corpus fit was 2 extra interpreted corpus passes — see
     # similarity.fit_centroids)
-    cents = similarity.fit_centroids(base_c, n_cells, n_rows_est).persist()
+    cents = execution.pin(similarity.fit_centroids(base_c, n_cells, n_rows_est))
     c_assigned = similarity.assign_cells(base_c, cents)
     q_assigned = similarity.assign_cells(similarity.prepare_vectors(queries), cents)
     return similarity.exact_topk_join(
@@ -2413,8 +2402,8 @@ def j48_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- j49: NN-Descent approximate k-NN graph ------------------------------------------
 def _nn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NN-Descent graph j49 returns and j53 searches (same params),
-    built fresh on every call and pinned with localCheckpoint so each
-    consumer's readers re-read it, never re-descend."""
+    built fresh on every call. Its descent rounds are cut, so a second
+    reader re-runs only the final top-k window over the last round."""
     from scopus_spark.catalog import row_count_estimate
 
     # r10: spread_scan — descent scoring/init fan out from this scan
@@ -2422,7 +2411,7 @@ def _nn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = row_count_estimate(sf_dir, "embeddings")
     return similarity.nn_descent(
         e, k=10, rounds=3, n_cells=similarity.auto_n_cells(n), n_rows=n
-    ).localCheckpoint(eager=False)
+    )
 
 
 @register("j49")  # approximate by design: recall pinned in tests/test_nn_descent.py

@@ -540,10 +540,10 @@ def a21_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the blob creates spread across the session's cores (one doc_id
         # still lands in exactly one task -> still one file per dir).
         # Measured: a21 one-shot 8.37 -> 2.78 s (idle, noop write).
-        from scopus_spark.operators.similarity import pin_partitions
+        from scopus_spark.execution import width
 
         sample.repartition(
-            pin_partitions(spark), "doc_id"
+            width(spark), "doc_id"
         ).write.partitionBy("doc_id").mode("overwrite").text(path)
     back = (
         spark.read.format("binaryFile")

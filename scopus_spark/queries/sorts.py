@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from scopus_spark import execution
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
 
@@ -132,21 +133,20 @@ def f4_distributed_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes local ranks partitions by partition_id — maximal
     parallelism, state = one counter per task.
 
-    localCheckpoint PINS the range exchange: the size ledger and the
-    rank stream both read one materialization, so the two consumers can
+    A cut (execution.cut) fixes the range exchange: the size ledger and
+    the rank stream both read one materialization, so the two consumers can
     never observe different RangePartitioner samples (exchange reuse
     off, stage retry, AQE replan would otherwise silently misalign
-    offset + local rank). Same pin as exact_median
+    offset + local rank). Same cut as exact_median
     (operators/frequency.py); determinism is pinned by
     tests/test_plans.py running this key under
     spark.sql.exchange.reuse=false."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    ranged = (
+    ranged = execution.cut(
         o.repartitionByRange(
             32, F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+        ).withColumn("pid", F.spark_partition_id()),
+        eager=True,
     )
     sizes = ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
     # exclusive prefix over the bounded (<= 32-row) partition ledger

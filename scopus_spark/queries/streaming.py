@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scopus_spark import execution
 from scopus_spark.catalog import table
 from scopus_spark.queries import _fp
 from scopus_spark.registry import register
@@ -943,9 +944,9 @@ def i17_change_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted: list[DataFrame] = []
 
     def sink(df: DataFrame, from_v: int, to_v: int) -> None:
-        # pin the pass's rows eagerly: the NEXT commit must not be able
+        # cut the pass's rows eagerly: the NEXT commit must not be able
         # to retroactively change what this trigger emitted
-        emitted.append(df.localCheckpoint(eager=True))
+        emitted.append(execution.cut(df, eager=True))
 
     consumer.run_available(spark, sink)  # pass 1: v1 inserts
     vt.merge(  # lands BETWEEN the two stream passes

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scopus_spark import execution
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
 from scopus_spark.session import STAGE_ROOT
@@ -313,15 +314,13 @@ def o4_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merges still run strictly one after another against the on-disk
     # table, which is the declared incremental-maintenance behavior.
     batch = F.unix_micros(F.col("ts").cast("timestamp")) % 3
-    states = ohlc_state(ev, extra_group_exprs={"_b": batch}).persist()
-    try:
+    with execution.scope():
+        states = execution.pin(ohlc_state(ev, extra_group_exprs={"_b": batch}))
         for b in range(3):
             incremental_ohlc_state(
                 target,
                 states.filter(F.col("_b") == b).select(*STATE_COLS),
             )
-    finally:
-        states.unpersist()
     return read_rollup(spark, target)
 
 

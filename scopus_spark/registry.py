@@ -13,10 +13,13 @@ Usage::
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from scopus_spark import execution
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -52,7 +55,9 @@ _LOADED = False
 
 def register(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query under its SURVEY §2 key, optionally with DuckDB
-    oracle SQL.
+    oracle SQL. The registry's entry builds in an ``execution.query``
+    scope: what the build pins or cuts lives as long as the returned
+    frame. The decorated function itself is returned unchanged.
 
     After adding/removing a key, run ``python tools/sync.py`` — it
     regenerates the generated contract docs (SURVEY §2.Z + docs/COVERAGE.md)
@@ -62,7 +67,8 @@ def register(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn
     def deco(fn: QueryFn) -> QueryFn:
         if key in _QUERIES:
             raise ValueError(f"duplicate query key: {key}")
-        _QUERIES[key] = fn
+        _QUERIES[key] = functools.update_wrapper(
+            functools.partial(execution.query, fn), fn)
         if oracle is not None:
             _ORACLES[key] = oracle
         return fn

@@ -29,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scopus_spark import execution
 from scopus_spark.operators.upsert import upsert_partitioned
 
 
@@ -70,8 +71,8 @@ def foreach_batch_upsert(
         # re-read the batch's source files and re-run the latest-per-key
         # shuffle aggregate. Pin the collapsed delta for the span of the
         # merge — bounded: one row per key of ONE micro-batch.
-        delta = latest_per_key(batch_df, key_cols, order_col).persist()
-        try:
+        with execution.scope():
+            delta = execution.pin(latest_per_key(batch_df, key_cols, order_col))
             if op_col is None:
                 upsert_partitioned(
                     target_path, delta, key_cols, partition_col
@@ -85,8 +86,6 @@ def foreach_batch_upsert(
             upsert_partitioned(
                 target_path, upserts, key_cols, partition_col, deletes=deletes
             )
-        finally:
-            delta.unpersist()
 
     return sink
 
@@ -253,8 +252,8 @@ def foreach_batch_versioned_upsert(
         # r10: pin the collapsed delta across the merge's three
         # evaluations (see foreach_batch_upsert) — bounded: one row per
         # key of ONE micro-batch.
-        delta = latest_per_key(batch_df, key_cols, order_col).persist()
-        try:
+        with execution.scope():
+            delta = execution.pin(latest_per_key(batch_df, key_cols, order_col))
             vt = VersionedTable(target_path)
             token = f"{stream_name}:{batch_id}"
             if op_col is None:
@@ -274,8 +273,6 @@ def foreach_batch_versioned_upsert(
                 deletes=deletes,
                 commit_token=token,
             )
-        finally:
-            delta.unpersist()
 
     return sink
 

@@ -21,7 +21,7 @@ def _exact_top10(spark, e):
     q = base.filter(F.col("vec_id") == 0).collect()[0]
     qe = F.array(*[F.lit(float(x)) for x in q.emb])
     cos = F.round(
-        similarity._dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(q.nrm))),
+        similarity.dot(F.col("emb"), qe) / (F.col("nrm") * F.lit(float(q.nrm))),
         6,
     )
     return [

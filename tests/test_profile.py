@@ -37,6 +37,7 @@ def test_profile_records_every_layer_of_a_key(tmp_path):
     assert rec["plan"].startswith("== Physical Plan ==")
     assert rec["wall_s"] > 0
     assert rec["exec.persisted_rdds_after"] >= 0
+    assert rec["exec.cached_plans_after"] == 0
 
 
 def test_diff_prints_per_key_ratios(tmp_path, capsys):

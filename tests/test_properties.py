@@ -498,14 +498,14 @@ def test_pin_partitions_respects_configured_shuffle_width(spark):
     never DOWNSIZE below the deployment's configured shuffle width — at
     100 TB a wide stream needs more partitions than cores (guide §5).
     Simulate a high-width deployment and a low one and check both bounds."""
-    from scopus_spark.operators.similarity import pin_partitions
+    from scopus_spark.execution import width
 
     cores = spark.sparkContext.defaultParallelism
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(cores * 64))
-        assert pin_partitions(spark) == cores * 64  # wide deployment wins
+        assert width(spark) == cores * 64  # wide deployment wins
         spark.conf.set("spark.sql.shuffle.partitions", "1")
-        assert pin_partitions(spark) == cores  # never below the core count
+        assert width(spark) == cores  # never below the core count
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -126,9 +126,8 @@ def test_cell_pair_pruning_bites_on_clustered_data(spark):
 
 
 def test_j37_plan_no_corpus_cartesian(spark, sf_dir, monkeypatch):
-    # the returned frame filters a lazily-checkpointed scored stream
-    # (r11: single-compile cosine), so the visible plan stops at the
-    # LogicalRDD; assert no cartesian there…
+    # the returned frame filters a pinned scored stream (r11:
+    # single-compile cosine); assert no cartesian in its plan…
     j37 = QUERIES["j37"](spark, sf_dir)
     plan = _plan(j37)
     assert "CartesianProduct" not in plan, plan

@@ -51,7 +51,7 @@ def build_table() -> str:
         "| --- | --- | --- | --- |",
     ]
     for key in sorted(qs, key=_family_order):
-        fn = qs[key]
+        fn = inspect.unwrap(qs[key])  # the registered build, not its query scope
         doc = (inspect.getdoc(fn) or "").split("\n")[0].strip()
         if len(doc) > 88:
             doc = doc[:85] + "..."

@@ -24,7 +24,9 @@ run the profile takes, with perfbench's tracing (``perfbench/tracing.py``):
   and the Python-worker bytes and stage time. These count every job the
   key ran; ``queries.eager_jobs`` says how many ran during the build
   (n6's build runs jobs);
-- ``exec.persisted_rdds_after``: persisted RDDs alive after the write;
+- ``exec.persisted_rdds_after`` and ``exec.cached_plans_after``:
+  persisted RDDs and CacheManager entries left once the key's frame is
+  dropped (and garbage-collected) — what the key leaves to the next one;
 - ``codegen.classes_compiled``: generated classes Janino compiled for
   the key (cache misses of Spark's compiled-class cache). The record's
   top-level ``codegen.classes_compiled`` counts the whole run, warm-up
@@ -60,6 +62,7 @@ The formatted plan of each key is the record's ``plan`` field, e.g.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import re
@@ -230,6 +233,8 @@ def run_key(spark, tracer, fn, key: str, sf_dir: str, tag: str) -> dict:
         for prop in (tracing.OP_PROP, tracing.PHASE_PROP):
             sc.setLocalProperty(prop, None)
         sc.setJobDescription(None)
+    del df  # what the query pinned or cut is released with its frame
+    gc.collect()
     return {
         "wall_s": round(build_s + write_s, 3),
         "queries.build_ms": round(build_s * 1e3, 1),
@@ -237,6 +242,8 @@ def run_key(spark, tracer, fn, key: str, sf_dir: str, tag: str) -> dict:
         **{f"catalyst.{p}_ms": ms for p, ms in sorted(phases.items())},
         "exec.noop_write_ms": round(write_s * 1e3, 1),
         "exec.persisted_rdds_after": sc._jsc.getPersistentRDDs().size(),
+        "exec.cached_plans_after": spark._jsparkSession.sharedState()
+        .cacheManager().numCachedEntries(),
         "codegen.classes_compiled": classes_compiled(spark) - compiled0,
         "plan": plan,
     }

@@ -21,7 +21,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 def main() -> int:
     rc = 0
     for script in ("gen_survey_inventory.py", "gen_coverage.py"):
-        r = subprocess.run([sys.executable, os.path.join(HERE, script)])
+        # -P: keep tools/ off sys.path, where profile.py shadows the stdlib
+        r = subprocess.run([sys.executable, "-P", os.path.join(HERE, script)])
         rc = rc or r.returncode
     return rc
 
