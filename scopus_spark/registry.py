@@ -56,8 +56,8 @@ _LOADED = False
 def register(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query under its SURVEY §2 key, optionally with DuckDB
     oracle SQL. The registry's entry builds in an ``execution.query``
-    scope: what the build pins or cuts lives as long as the returned
-    frame. The decorated function itself is returned unchanged.
+    scope: what the build pins lives as long as the returned frame.
+    The decorated function itself is returned unchanged.
 
     After adding/removing a key, run ``python tools/sync.py`` — it
     regenerates the generated contract docs (SURVEY §2.Z + docs/COVERAGE.md)
