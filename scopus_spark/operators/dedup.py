@@ -7,7 +7,7 @@ Four tiers, all DataFrame-native:
                         (band_no, band_hash); candidates re-verified with
                         exact Jaccard (j2 semantics) so declared results
                         are always exact.
-3. SimHash (j10/j11):   64-bit-ish fingerprint, map-side; hamming-near
+3. SimHash (j10/j11):   60-bit fingerprint, map-side; hamming-near
                         pairs via band-equality join + bit_count verify.
 4. Embedding cosine (queries/llm.py j12): near-dup by vector similarity.
 
@@ -22,7 +22,7 @@ band); AQE skew splitting handles hot bands (e.g. boilerplate docs).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from scopus_spark import execution
@@ -34,95 +34,42 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 SIMHASH_BITS = 60
 
 
-def minhash_signature(text: str | Column, n_hashes: int = N_HASHES) -> Column:
-    """MinHash signature as array<string>: element s = min over shingles of
-    md5(s || ':' || shingle). Entirely map-side (nested higher-order fns,
-    no explode/shuffle)."""
-    sh = word_shingles(text)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda s: F.array_min(
-            F.transform(
-                sh, lambda g: F.md5(F.concat(s.cast("string"), F.lit(":"), g))
-            )
-        ),
-    )
-
-
-def band_hashes(signature: Column, n_bands: int = N_BANDS,
-                rows_per_band: int = ROWS_PER_BAND) -> Column:
-    """LSH band digests: md5 over each contiguous signature slice."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: F.md5(
-            F.array_join(F.slice(signature, b * rows_per_band + 1, rows_per_band), "|")
-        ),
-    )
-
-
 def banded_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = N_HASHES,
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(doc_id, band_no, band_hash) — the SAME values as
-    band_hashes(minhash_signature(...)), computed in the shape Tungsten
-    can actually run fast: explode shingles once, evaluate the n_hashes
-    md5s as PLAIN codegen'd column expressions per (doc, shingle) row,
-    take the per-hash min with one map-side-combinable groupBy(doc), and
-    band the 12 min columns with n_bands more codegen'd md5s.
+    """(doc_id, band_no, band_hash): MinHash-LSH band digests.
 
-    Why not the nested-higher-order-function expression: transform()
-    lambdas are INTERPRETED (no whole-stage codegen), and Catalyst
-    re-evaluates the whole signature subtree on each side of the LSH
-    self-join — measured at sf0.1 that was ~150 s PER EVALUATION (~310 s
-    for j9) vs ~3 s for this shape, same output bit-for-bit. The
-    explode costs one shuffle (groupBy doc_id, partial min map-side) —
-    at 100 TB that exchange carries one row per doc, and interpreted
-    expression evaluation would otherwise burn executor CPU ~50x.
+    Signature element s is the min over the doc's word-3-gram shingles of
+    md5(s || ':' || shingle), for s in 0..N_HASHES-1; band b is
+    md5 of signature elements b*ROWS_PER_BAND .. (b+1)*ROWS_PER_BAND-1
+    joined with '|'. Shingles explode once, the N_HASHES md5s run as
+    plain codegen'd expressions per (doc, shingle) row, and one
+    map-side-combinable groupBy(doc) takes the minima. Nested
+    higher-order functions would be interpreted (no whole-stage codegen)
+    and re-evaluated on each side of the LSH self-join: measured at sf0.1
+    that was ~150 s per evaluation against ~3 s for this shape.
 
-    Degenerate docs (< k tokens → empty shingle set) produce NO rows
-    and never become candidates. NOTE this is a deliberate SEMANTIC FIX
-    versus the expression form, not a bit-identical transcription for
-    such docs: the old all-null signatures collapsed to the same
-    md5('') in every band (Spark's array_join skips nulls), silently
-    pairing ALL degenerate docs with each other — and mismatching the
-    DuckDB oracles, whose array_to_string of an all-NULL list is NULL.
-    No fixture corpus contains sub-k-token docs, so every oracle hash
-    is unchanged; on corpora that do, the new behavior (no bands, no
-    pairs) is the correct one."""
-    ex = docs.select(
+    The expressions are SQL text: Catalyst parses them into the same
+    trees as the equivalent Column calls, in a handful of py4j round
+    trips instead of one per call.
+
+    Degenerate docs (< 3 tokens, so an empty shingle set) produce NO rows
+    and never become candidates, as in the DuckDB oracles."""
+    mins = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(word_shingles(text_col)).alias("shingle"),
+    ).groupBy("doc_id").agg(*[
+        F.expr(f"min(md5(concat('{s}:', shingle))) AS _h{s}")
+        for s in range(N_HASHES)
+    ])
+    bands = ", ".join(
+        "md5(concat_ws('|', "
+        + ", ".join(f"_h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+        + "))"
+        for b in range(N_BANDS)
     )
-    mins = ex.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))
-            ).alias(f"_h{s}")
-            for s in range(n_hashes)
-        ]
-    )
-    bands = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                *[
-                    F.col(f"_h{b * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ],
-            )
-        ).alias(f"_b{b}")
-        for b in range(n_bands)
-    ]
-    return mins.select("doc_id", *bands).select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"_b{b}") for b in range(n_bands)])
-        ).alias("band_no", "band_hash"),
+    return mins.selectExpr(
+        "doc_id", f"posexplode(array({bands})) AS (band_no, band_hash)"
     )
 
 
@@ -156,6 +103,36 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _ranked_shingle_sets(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, sh_sorted, n_sh): each doc's distinct word-3-gram
+    shingles sorted rarest first, by the global order (document
+    frequency asc, shingle asc), and their count. Pinned: every caller
+    reads it from several subtrees, each of which would otherwise re-run
+    the whole explode -> df count -> join -> per-doc sort pipeline
+    (measured at sf0.1, the j2 plan carried 30 Exchanges, 3 evaluations,
+    before pinning)."""
+    sh = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(word_shingles(text_col)).alias("shingle"),
+    )
+    # Document frequency via groupBy + equi-join back, NOT a count window.
+    # A Window.partitionBy("shingle") count funnels every occurrence of a
+    # hot boilerplate shingle through ONE task and AQE cannot split a
+    # window partition; groupBy gets map-side partial aggregation (the
+    # hot key arrives at the reducer as a handful of partial counts) and
+    # the join back is an equi-join AQE can skew-split. Shingles are
+    # per-doc distinct (word_shingles -> array_distinct), so count(*) per
+    # shingle IS the document frequency.
+    shingle_df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    return execution.pin(sh.join(shingle_df, "shingle").groupBy("doc_id").agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("df", "shingle"))),
+            lambda s: s.shingle,
+        ).alias("sh_sorted"),
+        F.count(F.lit(1)).alias("n_sh"),
+    ))
+
+
 def prefix_filter_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -182,32 +159,8 @@ def prefix_filter_pairs(
 
     Returns (doc_a, doc_b, jaccard) with jaccard rounded to 6dp.
     """
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(word_shingles(text_col)).alias("shingle")
-    )
-    # Document frequency via groupBy + equi-join back, NOT a count window.
-    # A Window.partitionBy("shingle") count funnels every occurrence of a
-    # hot boilerplate shingle through ONE task and AQE cannot split a
-    # window partition; groupBy gets map-side partial aggregation (the
-    # hot key arrives at the reducer as a handful of partial counts) and
-    # the join back is an equi-join AQE can skew-split. Shingles are
-    # per-doc distinct (word_shingles -> array_distinct), so count(*) per
-    # shingle IS the document frequency.
-    shingle_df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ranked = sh.join(shingle_df, "shingle")
-    # Global order = (df asc, shingle asc): deterministic, rarity-first.
-    # pinned: docsets feeds THREE subtrees (the prefix explode and both
-    # verify sides), and each would otherwise re-run the whole
-    # shingle-explode -> df-count -> join -> per-doc sort pipeline —
-    # measured r10 at sf0.1, the j2 plan carried 30 Exchanges
-    # (3 evaluations) before pinning.
-    docsets = execution.pin(ranked.groupBy("doc_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("df", "shingle"))),
-            lambda s: s.shingle,
-        ).alias("sh_sorted"),
-        F.count(F.lit(1)).alias("n_sh"),
-    ))
+    # docsets feeds THREE subtrees (the prefix explode and both verify sides)
+    docsets = _ranked_shingle_sets(docs, id_col, text_col)
     prefix_len = (
         F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
     ).cast("int")
@@ -251,98 +204,40 @@ def prefix_filter_pairs(
     )
 
 
-def simhash(text: str | Column, n_bits: int = SIMHASH_BITS) -> Column:
-    """SimHash fingerprint over whitespace tokens.
-
-    bit i = 1 iff sum over tokens of (+1 if bit i of hash60(token) else -1)
-    is positive. Map-side: n_bits nested folds over the token array."""
-    toks = F.split(F.col(text) if isinstance(text, str) else text, " ")
-    hashes = F.transform(toks, lambda t: hash60(t))
-
-    def bit_balance(i: Column) -> Column:
-        mask = F.pow(F.lit(2.0), i).cast("long")
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(mask) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(n_bits - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, i: acc
-        + F.when(bit_balance(i) > 0, F.pow(F.lit(2.0), i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
-    )
-
-
-def simhash_bands(fp: Column, n_bands: int = 4, bits: int = SIMHASH_BITS) -> Column:
-    """Split a simhash into n_bands bit-slices for hamming-LSH joins.
-
-    Band value = the masked (unshifted) bit-slice — band_no is part of the
-    join key, so no shift is needed, keeping everything in exact long
-    bitwise ops (powers of two are exactly representable doubles -> long).
-    """
-    per = bits // n_bands
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
-        lambda b: fp.bitwiseAND(
-            (F.pow(F.lit(2.0), (b + 1) * per) - F.pow(F.lit(2.0), b * per)).cast(
-                "long"
-            )
-        ),
-    )
+def simhash_bands(fp: str) -> str:
+    """SQL array of the N_BANDS bit-slices of simhash column `fp` (4 x 15
+    bits, as in the j11 oracle), for hamming-LSH joins. Band value = the
+    masked (unshifted) slice: band_no is part of the join key, so no
+    shift is needed."""
+    per = SIMHASH_BITS // N_BANDS
+    masks = [((1 << per) - 1) << (per * b) for b in range(N_BANDS)]
+    return "array(" + ", ".join(f"{fp} & {m}L" for m in masks) + ")"
 
 
 def simhash_df(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bits: int = SIMHASH_BITS,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(doc_id, fp) — the SAME fingerprints as simhash(text), computed in
-    the codegen shape (the banded_signatures rationale applied to
-    SimHash): the expression form folds the token array once PER BIT
-    (60 interpreted lambda folds per document); here tokens explode
-    once, hash60 evaluates as ONE codegen'd md5 per (doc, token) row,
-    the 60 bit balances are plain conditional-sum aggregates with
+    """(doc_id, fp): the SIMHASH_BITS-bit SimHash of each document's
+    whitespace tokens. Bit i of fp is set iff more tokens have bit i of
+    hash60(token) set than not. Every token occurrence votes (explode keeps
+    duplicates), and split() never yields an empty array, so every doc
+    gets a row.
+
+    Tokens explode once, hash60 runs as one codegen'd md5 per (doc,
+    token) row, the bit balances are plain conditional sums with
     map-side partials, and the fingerprint packs from the aggregated
-    row. One groupBy(doc) shuffle carrying one row per doc. Duplicate
-    and empty tokens vote exactly as in the fold (explode preserves
-    multiplicity; split() never yields an empty array)."""
-    toks = docs.select(
+    row: one groupBy(doc) shuffle carrying one row per doc. Balances and
+    fingerprint are SQL text (the banded_signatures rationale)."""
+    hashed = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.split(
-                F.col(text_col) if isinstance(text_col, str) else text_col,
-                " ",
-            )
-        ).alias("tok"),
-    )
-    h = hash60(F.col("tok"))
-    balances = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    h.bitwiseAND(
-                        F.pow(F.lit(2.0), F.lit(b)).cast("long")
-                    )
-                    != 0,
-                    F.lit(1),
-                ).otherwise(F.lit(-1))
-            ).alias(f"_s{b}")
-            for b in range(n_bits)
-        ]
-    )
-    fp = None
-    for b in range(n_bits):
-        term = F.when(
-            F.col(f"_s{b}") > 0, F.pow(F.lit(2.0), F.lit(b)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    return balances.select("doc_id", fp.alias("fp"))
+        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+    ).select("doc_id", hash60(F.col("tok")).alias("h"))
+    balances = hashed.groupBy("doc_id").agg(*[
+        F.expr(f"sum(IF((h & {1 << b}L) != 0, 1, -1)) AS _s{b}")
+        for b in range(SIMHASH_BITS)
+    ])
+    fp = " + ".join(f"IF(_s{b} > 0, {1 << b}L, 0L)" for b in range(SIMHASH_BITS))
+    return balances.selectExpr("doc_id", f"{fp} AS fp")
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
@@ -355,8 +250,8 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
     come from simhash_df (codegen shape) and are cut (execution.cut) so
     the band self-join's two sides and every later reader share one
     evaluation; like lsh_candidate_pairs, the build runs the pass."""
-    banded = execution.cut(simhash_df(docs, id_col, text_col)).select(
-        "doc_id", "fp", F.posexplode(simhash_bands(F.col("fp"))).alias("band_no", "band_val")
+    banded = execution.cut(simhash_df(docs, id_col, text_col)).selectExpr(
+        "doc_id", "fp", f"posexplode({simhash_bands('fp')}) AS (band_no, band_val)"
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -411,21 +306,8 @@ def containment_pairs(
     the df count — no new corpus-scale state. Returns
     (src_doc, dst_doc, containment) rounded to 6dp.
     """
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(text_col)).alias("shingle"),
-    )
-    shingle_df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ranked = sh.join(shingle_df, "shingle")
-    # pinned (the prefix_filter_pairs rationale): docsets feeds
-    # FOUR subtrees here (prefix, postings, both verify sides)
-    docsets = execution.pin(ranked.groupBy("doc_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("df", "shingle"))),
-            lambda s: s.shingle,
-        ).alias("sh_sorted"),
-        F.count(F.lit(1)).alias("n_sh"),
-    ))
+    # docsets feeds FOUR subtrees (prefix, postings, both verify sides)
+    docsets = _ranked_shingle_sets(docs, id_col, text_col)
     # src prefix: the first |A| - ceil(t*|A|) + 1 rarity-sorted shingles.
     prefix_len = (
         F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from scopus_spark import etl, execution
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
-from scopus_spark.session import STAGE_ROOT
+from scopus_spark.session import STAGE_ROOT, stage_dir
 
 _EXTRACTED: dict[str, str] = {}
 
@@ -391,12 +391,7 @@ def a19_incremental_snapshot_apply(spark: SparkSession, sf_dir: str) -> DataFram
         .alias("text"),
         bucket,
     )
-    target = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "a19_snapshot",
-    )
+    target = stage_dir(sf_dir, "a19_snapshot")
     shutil.rmtree(target, ignore_errors=True)
     vt = VersionedTable(target)
     vt.write_initial(snap_a, "bucket")
@@ -453,12 +448,7 @@ def ingest_new_files_twice(spark: SparkSession, sf_dir: str) -> str:
     per-run ingested-file counts."""
     import shutil
 
-    base = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "a20",
-    )
+    base = stage_dir(sf_dir, "a20")
     shutil.rmtree(base, ignore_errors=True)
     landing = os.path.join(base, "landing")
     target = os.path.join(base, "target")
@@ -527,7 +517,6 @@ def a27_versioned_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job: compaction cost scales with fragment count, vacuum
     is metadata + unlink, and readers pinned to v2 keep working until
     their snapshot is vacuumed."""
-    import os
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
@@ -535,12 +524,7 @@ def a27_versioned_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", (F.col("doc_id") % 8).alias("bucket")
     )
-    root = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "a27_versioned",
-    )
+    root = stage_dir(sf_dir, "a27_versioned")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(docs.repartition(16), "bucket")  # fragmented on purpose
@@ -587,7 +571,6 @@ def a28_versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -595,7 +578,7 @@ def a28_versioned_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
         "o_orderpriority",
         (F.col("o_orderkey") % 4).alias("bucket"),
     )
-    root = _stage(sf_dir, "a28_evolution")
+    root = stage_dir(sf_dir, "a28_evolution")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(
@@ -642,12 +625,11 @@ def a29_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_returnflag"
     )
-    root = _stage(sf_dir, "a29_stats")
+    root = stage_dir(sf_dir, "a29_stats")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(
@@ -707,7 +689,6 @@ def a30_manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     docs = table(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") % 16).alias("bucket")
@@ -723,7 +704,7 @@ def a30_manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
         bucket,
     )
-    root = _stage(sf_dir, "a30_changefeed")
+    root = stage_dir(sf_dir, "a30_changefeed")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(snap_a, "bucket")  # v1 = snapshot A
@@ -887,7 +868,6 @@ def a31_incremental_aggregate_maintenance(
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     docs = table(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") % 16).alias("bucket")
@@ -903,7 +883,7 @@ def a31_incremental_aggregate_maintenance(
         .alias("text"),
         bucket,
     )
-    root = _stage(sf_dir, "a31_ivm")
+    root = stage_dir(sf_dir, "a31_ivm")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(snap_a, "bucket")
@@ -1004,12 +984,11 @@ def a32_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", (F.col("doc_id") % 8).alias("bucket")
     )
-    root = _stage(sf_dir, "a32_deletion_vectors")
+    root = stage_dir(sf_dir, "a32_deletion_vectors")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(docs.repartition(16), "bucket")  # fragmented on purpose
@@ -1105,13 +1084,12 @@ def a33_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
     from scopus_spark.streaming.table_source import (
         ChangeFeedConsumer,
         replication_sink,
     )
 
-    root = _stage(sf_dir, "a33_repl")
+    root = stage_dir(sf_dir, "a33_repl")
     shutil.rmtree(root, ignore_errors=True)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
@@ -1201,7 +1179,6 @@ def a34_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1211,7 +1188,7 @@ def a34_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("price_cents"),
         (F.col("o_orderkey") % 2).alias("bucket"),
     )
-    root = _stage(sf_dir, "a34_bloom")
+    root = stage_dir(sf_dir, "a34_bloom")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(
@@ -1268,7 +1245,6 @@ def a35_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1276,7 +1252,7 @@ def a35_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("long").alias("n_chars"),
         (F.col("doc_id") % 4).alias("bucket"),
     )
-    root = _stage(sf_dir, "a35_wap")
+    root = stage_dir(sf_dir, "a35_wap")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(d.filter(F.col("doc_id") % 3 == 0), "bucket")
@@ -1333,7 +1309,6 @@ def a36_sql_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
     from scopus_spark.sql_dml import SqlDml
 
     docs = table(spark, sf_dir, "documents")
@@ -1348,7 +1323,7 @@ def a36_sql_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    root = _stage(sf_dir, "a36_sql_merge")
+    root = stage_dir(sf_dir, "a36_sql_merge")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(snap_a, "bucket")
@@ -1404,12 +1379,11 @@ def a37_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", (F.col("doc_id") % 16).alias("bucket")
     )
-    root = _stage(sf_dir, "a37_evolution")
+    root = stage_dir(sf_dir, "a37_evolution")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(docs.filter(F.col("doc_id") % 97 != 3), "bucket")
@@ -1475,12 +1449,11 @@ def a38_named_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", (F.col("doc_id") % 8).alias("bucket")
     )
-    root = _stage(sf_dir, "a38_branch")
+    root = stage_dir(sf_dir, "a38_branch")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(docs.filter(F.col("doc_id") % 3 == 0), "bucket")
@@ -1541,7 +1514,6 @@ def a39_rowgroup_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1551,7 +1523,7 @@ def a39_rowgroup_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("total_cents"),
         (F.col("o_orderkey") % 4).alias("bucket"),
     )
-    root = _stage(sf_dir, "a39_rowgroup")
+    root = stage_dir(sf_dir, "a39_rowgroup")
     shutil.rmtree(root, ignore_errors=True)
     vt = VersionedTable(root)
     vt.write_initial(

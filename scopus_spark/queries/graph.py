@@ -49,14 +49,15 @@ _PAIRS_CTE = f"""
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union of j9 + j11 pair signals as an (doc_a, doc_b) edge list.
 
-    The pipeline (MinHash signatures + 60 nested SimHash folds per doc)
+    The pipeline (MinHash signatures and SimHash fingerprints per doc)
     dominates each n-key's cost. It is built fresh on every call; the two
     pair signals cut their signature passes (operators/dedup.py), so the
     build runs those passes. A consumer that reads the edges in more than
-    one job cuts them too; every cut is released with the query's frame.
-    A pin measured worse at both places: its cached plan keeps the
-    configured 32-way shuffle width (Spark does not let AQE coalesce a
-    cached plan by default), so n12 ran 218 tasks against the cut's 31."""
+    one job cuts them too; every cut keeps Spark's own lifetime
+    (execution.py). A pin measured worse at both places: its cached plan
+    keeps the configured 32-way shuffle width (Spark does not let AQE
+    coalesce a cached plan by default), so n12 ran 218 tasks against the
+    cut's 31."""
     # r10: spread_scan — both pair signals run heavy per-doc map work
     d = spread_scan(spark, sf_dir, "documents")
     lsh = dedup.lsh_candidate_pairs(d).select("doc_a", "doc_b")

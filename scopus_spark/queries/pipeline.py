@@ -20,7 +20,7 @@ from scopus_spark.catalog import spread_scan, table
 from scopus_spark.operators import dedup, multimodal, similarity
 from scopus_spark.operators.text import LANG_MARKERS, char_shingles, lang_score, tokens
 from scopus_spark.registry import register
-from scopus_spark.session import STAGE_ROOT
+from scopus_spark.session import stage_dir
 
 
 # --- j9: MinHash-LSH candidate pairs ------------------------------------------
@@ -63,9 +63,9 @@ J9_PAIRS_SQL = """
 def j9_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(12 hashes) + LSH(4 bands x 3 rows) candidate pairs.
 
-    Signatures and band digests are map-side array expressions (no shuffle
-    until the band join — operators/dedup.py). Candidates feed the exact
-    Jaccard verifier (j2) in the production dedup pipeline.
+    Signatures are per-doc md5 minima over the exploded shingles, banded
+    map-side (operators/dedup.banded_signatures). Candidates feed the
+    exact Jaccard verifier (j2) in the production dedup pipeline.
     """
     # r10: spread_scan — the 12-md5-per-shingle signature map work
     # otherwise serializes onto the one-split bench scan (guide §2.5)
@@ -101,11 +101,11 @@ _SIMHASH_ORACLE_CORE = """
     oracle=_SIMHASH_ORACLE_CORE + "SELECT doc_id, fp AS simhash FROM fps",
 )
 def j10_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash per document via the codegen shape
-    (operators/dedup.simhash_df): token explode + one groupBy(doc) with
-    60 map-side-combinable bit-balance sums — identical fingerprints to
-    the expression fold, ~20x faster evaluated (the interpreted-HOF
-    lesson, see banded_signatures)."""
+    """60-bit SimHash fingerprint per document (operators/dedup.simhash_df).
+
+    Bit i is set iff more of the doc's tokens have bit i of hash60 set
+    than not: one token explode and one groupBy(doc) with 60
+    map-side-combinable bit-balance sums."""
     d = table(spark, sf_dir, "documents")
     return dedup.simhash_df(d).select(
         "doc_id", F.col("fp").alias("simhash")
@@ -136,7 +136,8 @@ J11_PAIRS_SQL = _SIMHASH_ORACLE_CORE + """,
 def j11_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming<=8 SimHash pairs via 15-bit band LSH + exact bit_count
     verification (operators/dedup.py)."""
-    # r10: spread_scan — 60 bit-balance sums per token row (guide §2.5)
+    # spread_scan: the 60 bit-balance sums per token row are the heavy
+    # map work, and they would otherwise run on the one-split scan
     return dedup.simhash_near_pairs(spread_scan(spark, sf_dir, "documents"))
 
 
@@ -853,7 +854,6 @@ def j25_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned pre-merge snapshot WITHOUT the eager cut the
     stage-and-swap layout needed (the r5 'j25 lesson' materialization) —
     one less full copy of the stored bands per batch."""
-    import os
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
@@ -873,12 +873,7 @@ def j25_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pmod("doc_id", F.lit(64)),
         )
 
-    target = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "j25_bands",
-    )
+    target = stage_dir(sf_dir, "j25_bands")
     shutil.rmtree(target, ignore_errors=True)
     vt = VersionedTable(target)
     vt.write_initial(banded(existing), "doc_bkt")
@@ -1082,7 +1077,6 @@ def j28_incremental_1nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FULL corpus: a green hash proves incremental == full, exactly.
     """
     import json
-    import os
     import shutil
 
     from scopus_spark.catalog import row_count_estimate
@@ -1099,12 +1093,7 @@ def j28_incremental_1nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = e.filter(bucket < 90)
     batch = e.filter(bucket >= 90)
 
-    root = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "j28_ivf",
-    )
+    root = stage_dir(sf_dir, "j28_ivf")
     cents_path, index_path = f"{root}/centroids", f"{root}/index"
     shutil.rmtree(root, ignore_errors=True)
     # one-time index build over the existing corpus. Size n_cells from the
@@ -2627,11 +2616,9 @@ def j53_graph_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_graph_search.py."""
     import shutil
 
-    from scopus_spark.queries.scans import _stage
-
     e = table(spark, sf_dir, "embeddings")
     g = _nn_graph(spark, sf_dir)
-    path = _stage(sf_dir, "j53_graph")
+    path = stage_dir(sf_dir, "j53_graph")
     shutil.rmtree(path, ignore_errors=True)
     similarity.build_search_graph(g, path, n_buckets=16)
     return similarity.graph_beam_search_stored(

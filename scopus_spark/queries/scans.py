@@ -21,17 +21,7 @@ from pyspark.sql import types as T
 
 from scopus_spark.catalog import load_table, table
 from scopus_spark.registry import register
-from scopus_spark.session import STAGE_ROOT
-
-
-def _stage(sf_dir: str, name: str) -> str:
-    # pid-scoped: every staged round-trip (CSV/JSON/ORC/partitioned/Derby)
-    # writes then reads its own directory; a concurrently running test
-    # session and driver pass must not overwrite each other mid-read (and
-    # embedded Derby holds a JVM-exclusive lock on its db dir).
-    return os.path.join(
-        STAGE_ROOT, os.path.basename(sf_dir.rstrip("/")), f"pid{os.getpid()}", name
-    )
+from scopus_spark.session import stage_dir
 
 
 # --- a1: parquet scan with explicit schema + pushdown ---------------------------
@@ -85,7 +75,7 @@ def a2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a lineitem sample as CSV (header, ISO timestamps), read back
     with an explicit schema; hash-compared against the ORIGINAL parquet
     rows, proving lossless round-trip including timestamp parsing."""
-    path = _stage(sf_dir, "lineitem_csv")
+    path = stage_dir(sf_dir, "lineitem_csv")
     sample = (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") % 100 == 0)
@@ -132,7 +122,7 @@ def a2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a3_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines round-trip with a nested struct column, flattened after
     re-read; hash vs the original rows."""
-    path = _stage(sf_dir, "orders_json")
+    path = stage_dir(sf_dir, "orders_json")
     sample = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 50 == 0)
@@ -187,7 +177,7 @@ def a4_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY §1.1), read it with Spark 4's built-in XML source, hash vs the
     original table. Upgraded from the survey's ROWS-only plan: recomputing
     the oracle from parquet needs no DuckDB XML reader."""
-    path = _stage(sf_dir, "documents_xml")
+    path = stage_dir(sf_dir, "documents_xml")
     d = table(spark, sf_dir, "documents")
     d.select("doc_id", "text", "lang", "source", "n_chars").write.mode(
         "overwrite"
@@ -221,7 +211,7 @@ def a5_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partition directory (asserted in tests/test_plans.py). This is the
     engine's idempotent batch-sink shape (SURVEY §7.2): partition columns
     carry the predicate at 100 TB."""
-    path = _stage(sf_dir, "lineitem_part")
+    path = stage_dir(sf_dir, "lineitem_part")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag"
     )
@@ -261,7 +251,7 @@ def a6_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jdbc,
     )
 
-    url = derby_url(_stage(sf_dir, "derby_db"))
+    url = derby_url(stage_dir(sf_dir, "derby_db"))
     sample = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 16 == 1)
@@ -322,7 +312,7 @@ def a8_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet rows — proving lossless columnar re-encode incl. timestamps.
     DuckDB has no ORC reader, so the oracle reads the source parquet; the
     hash check is therefore end-to-end write+read fidelity."""
-    path = _stage(sf_dir, "orders_orc")
+    path = stage_dir(sf_dir, "orders_orc")
     sample = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 40 == 0)
@@ -386,8 +376,8 @@ def a15_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     between scanning a third of the table and scanning all of it whenever
     the partition predicate only exists post-join (date dims, tenant dims).
     l_quantity is integer-valued so sum(double) is partition-order exact."""
-    path = _stage(sf_dir, "lineitem_part_dpp")
-    dim_path = _stage(sf_dir, "returnflag_dim")
+    path = stage_dir(sf_dir, "lineitem_part_dpp")
+    dim_path = stage_dir(sf_dir, "returnflag_dim")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
@@ -480,7 +470,7 @@ def a18_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples every file footer at planning time — fine per evolution
     boundary, but steady-state reads should pin the explicit unified
     schema (the a1 policy); this key exercises the boundary itself."""
-    base = _stage(sf_dir, "a18_evolution")
+    base = stage_dir(sf_dir, "a18_evolution")
     orders = table(spark, sf_dir, "orders")
     b1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -525,7 +515,7 @@ def a21_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from scopus_spark.queries.sampling import _bucket
 
-    path = _stage(sf_dir, "media_blobs")
+    path = stage_dir(sf_dir, "media_blobs")
     sample = (
         table(spark, sf_dir, "documents")
         .filter(_bucket(F.col("doc_id")) >= 90)
@@ -605,7 +595,7 @@ def a23_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     widen to 21 bits/dim (42-bit z fits a long with room for a third
     dimension). Clustering cost is amortized across every subsequent
     pruned scan."""
-    path = _stage(sf_dir, "lineitem_zorder")
+    path = stage_dir(sf_dir, "lineitem_zorder")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_shipdate"
     )
@@ -652,7 +642,7 @@ def a24_corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame
     via an explicit schema (Spark requires the corrupt-record column
     declared StringType) — schema inference would cost a second scan and
     is disabled here anyway (a1 policy)."""
-    path = _stage(sf_dir, "docs_json_corrupt")
+    path = stage_dir(sf_dir, "docs_json_corrupt")
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.length("text").cast("long").alias("text_len")
     )
@@ -727,7 +717,7 @@ def a25_jdbc_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not jdbc_available(spark, DERBY_DRIVER):  # pragma: no cover
         raise RuntimeError("embedded Derby driver unavailable")
-    url = derby_url(_stage(sf_dir, "derby_ingest_db"))
+    url = derby_url(stage_dir(sf_dir, "derby_ingest_db"))
     sample = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 8 == 5)
@@ -774,7 +764,7 @@ def a26_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan — parsing distributes per-split like JSON (a6); the explicit
     schema skips the double-pass schema inference a naive load pays.
     PERMISSIVE-mode quarantine (a24's pattern) composes unchanged."""
-    path = _stage(sf_dir, "orders_xml")
+    path = stage_dir(sf_dir, "orders_xml")
     sample = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 50 == 0)

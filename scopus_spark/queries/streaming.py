@@ -20,7 +20,7 @@ from scopus_spark import execution
 from scopus_spark.catalog import table
 from scopus_spark.queries import _fp
 from scopus_spark.registry import register
-from scopus_spark.session import STAGE_ROOT
+from scopus_spark.session import stage_dir
 
 
 # Builder functions take an events-shaped DataFrame so the SAME logic runs
@@ -561,7 +561,6 @@ def i14_versioned_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-applied batch. At 100 TB each merge touches only the user-id
     buckets its batch carries (partition_col = user_id % 16, a pure
     function of the key); batch cost is O(batch), never the table."""
-    import os
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
@@ -583,12 +582,7 @@ def i14_versioned_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b1, b2 = int(cuts.c1), int(cuts.c2)
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    target = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "i14_cdc",
-    )
+    target = stage_dir(sf_dir, "i14_cdc")
     shutil.rmtree(target, ignore_errors=True)
     sink = foreach_batch_versioned_upsert(
         target,
@@ -659,7 +653,6 @@ def i15_versioned_append_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timezone
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
     from scopus_spark.streaming.harness import StreamRig
     from scopus_spark.streaming.sinks import foreach_batch_versioned_append
 
@@ -673,7 +666,7 @@ def i15_versioned_append_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events")
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    target = _stage(sf_dir, "i15_append")
+    target = stage_dir(sf_dir, "i15_append")
     shutil.rmtree(target, ignore_errors=True)
     sink = foreach_batch_versioned_append(
         target,
@@ -763,10 +756,9 @@ def i16_versioned_table_stream_source(spark: SparkSession, sf_dir: str) -> DataF
     import uuid
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
     from scopus_spark.streaming.table_source import AppendStreamSource
 
-    root = _stage(sf_dir, "i16_source")
+    root = stage_dir(sf_dir, "i16_source")
     shutil.rmtree(root, ignore_errors=True)
     ev = table(spark, sf_dir, "events").select(
         "event_id",
@@ -910,10 +902,9 @@ def i17_change_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from scopus_spark.operators.manifest import VersionedTable
-    from scopus_spark.queries.scans import _stage
     from scopus_spark.streaming.table_source import ChangeFeedConsumer
 
-    root = _stage(sf_dir, "i17_cdf")
+    root = stage_dir(sf_dir, "i17_cdf")
     shutil.rmtree(root, ignore_errors=True)
     ev = table(spark, sf_dir, "events").select(
         "user_id",

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 from scopus_spark import execution
 from scopus_spark.catalog import table
 from scopus_spark.registry import register
-from scopus_spark.session import STAGE_ROOT
+from scopus_spark.session import stage_dir
 
 # One row per (user, µs ts): latest event_id wins. The oracle mirrors the
 # G1 ns->µs truncation explicitly (make_timestamp(epoch_us(...))).
@@ -289,7 +289,6 @@ def o4_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges ≡ one batch aggregate, exactly (every state column is a
     commutative monoid). At 100 TB only the delta's bucket_date
     partitions are ever read or rewritten per merge."""
-    import os
     import shutil
 
     from scopus_spark.operators.rollup import (
@@ -299,12 +298,7 @@ def o4_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_rollup,
     )
 
-    target = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "o4_rollup",
-    )
+    target = stage_dir(sf_dir, "o4_rollup")
     shutil.rmtree(target, ignore_errors=True)
     ev = table(spark, sf_dir, "events")
     # r10: ONE scan+dedup+aggregate builds all three batch states (batch

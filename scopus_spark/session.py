@@ -69,6 +69,18 @@ STAGE_ROOT = "/tmp/scopus_spark_stage"
 _SWEPT = False
 
 
+def stage_dir(sf_dir: str, name: str) -> str:
+    """This process's staging directory `name` for corpus `sf_dir`:
+    ``<STAGE_ROOT>/<sf>/pid<N>/<name>``. Pid-scoped, so a concurrently
+    running test session and driver pass never overwrite each other
+    mid-read (and embedded Derby holds a JVM-exclusive lock on its db
+    dir); sweep_stale_stage_dirs reclaims the ``pid<N>`` dir once its
+    process is gone."""
+    return os.path.join(
+        STAGE_ROOT, os.path.basename(sf_dir.rstrip("/")), f"pid{os.getpid()}", name
+    )
+
+
 def sweep_stale_stage_dirs(root: str = STAGE_ROOT) -> list[str]:
     """Remove staging dirs left by DEAD driver processes. Every staged
     artifact is pid-scoped (``pid<N>`` / ``*_pid<N>`` under

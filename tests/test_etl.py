@@ -173,14 +173,10 @@ def test_a20_manifest_ingest_reads_only_new_files(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from scopus_spark.catalog import table
-    from scopus_spark.queries.etl_queries import STAGE_ROOT, ingest_new_files
+    from scopus_spark.queries.etl_queries import ingest_new_files
+    from scopus_spark.session import stage_dir
 
-    base = os.path.join(
-        STAGE_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "a20_unit",
-    )
+    base = stage_dir(sf_dir, "a20_unit")
     shutil.rmtree(base, ignore_errors=True)
     landing = os.path.join(base, "landing")
     target = os.path.join(base, "target")

@@ -88,10 +88,35 @@ def test_multimodal_frame_sampling(spark, sf_dir):
 
 def test_minhash_signature_shape(spark, sf_dir):
     d = table(spark, sf_dir, "documents").limit(5)
-    sigs = d.select(dedup.minhash_signature("text").alias("sig")).collect()
-    for r in sigs:
-        assert len(r.sig) == dedup.N_HASHES
-        assert all(len(h) == 32 for h in r.sig)  # md5 hex
+    rows = dedup.banded_signatures(d).collect()
+    by_doc: dict[int, list] = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append(r)
+    assert len(by_doc) == 5
+    for bands in by_doc.values():
+        assert sorted(r.band_no for r in bands) == list(range(dedup.N_BANDS))
+        for r in bands:
+            assert len(r.band_hash) == 32  # md5 hex
+            int(r.band_hash, 16)
+
+
+def test_dup_edges_build_py4j_budget(spark, sf_dir):
+    """The dedup sketches are SQL text, so the widest plan build in the
+    registry (the j9 + j11 dup-graph edges every n-key reads) costs a
+    bounded number of py4j round trips: about 1,230, against 11,536 when
+    every bit balance was a chain of Column calls."""
+    from perfbench import tracing
+    from scopus_spark.queries.graph import _dup_edges
+
+    F.lit(1) + 1  # pyspark reads a conf on its first Column operator call
+    tracer = tracing.Tracer(True)
+    tracer.count_py4j()
+    try:
+        _dup_edges(spark, sf_dir)
+        calls = tracer.py4j_calls
+    finally:
+        tracer.close()
+    assert 0 < calls <= 1500, calls
 
 
 def test_multimodal_resize_plumbing(spark, sf_dir):
@@ -172,21 +197,13 @@ def test_j25_band_table_maintained_after_increment(spark, sf_dir):
     """After the j25 incremental run, the on-disk band table must hold
     old AND batch bands (4 per doc) — the next increment probes against
     the merged state."""
-    import os
-
     from scopus_spark.catalog import table as _table
+    from scopus_spark.operators.manifest import VersionedTable
     from scopus_spark.registry import all_queries
+    from scopus_spark.session import stage_dir
 
     all_queries()["j25"](spark, sf_dir).collect()
-    target = os.path.join(
-        "/tmp/scopus_spark_stage",
-        os.path.basename(sf_dir.rstrip("/")),
-        f"pid{os.getpid()}",
-        "j25_bands",
-    )
-    from scopus_spark.operators.manifest import VersionedTable
-
-    stored = VersionedTable(target).read(spark)
+    stored = VersionedTable(stage_dir(sf_dir, "j25_bands")).read(spark)
     n_docs = _table(spark, sf_dir, "documents").count()
     assert stored.count() == 4 * n_docs
     assert stored.select("doc_id").distinct().count() == n_docs

@@ -108,13 +108,13 @@ def test_a23_zorder_prunes_more_rowgroups_than_natural_layout(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from scopus_spark.queries.scans import _stage
+    from scopus_spark.session import stage_dir
 
     # materialize the z layout (the registered query writes then reads it)
     QUERIES["a23"](spark, sf_dir).count()
-    zpath = _stage(sf_dir, "lineitem_zorder")
+    zpath = stage_dir(sf_dir, "lineitem_zorder")
 
-    npath = _stage(sf_dir, "lineitem_natural")
+    npath = stage_dir(sf_dir, "lineitem_natural")
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_shipdate"
     )
@@ -161,10 +161,10 @@ def test_a24_quarantine_captures_exactly_the_corrupt_subset(spark, sf_dir):
     columns NULL) and the good/bad split must partition the input."""
     from pyspark.sql import types as T
 
-    from scopus_spark.queries.scans import _stage
+    from scopus_spark.session import stage_dir
 
     QUERIES["a24"](spark, sf_dir).count()  # materializes the staged feed
-    path = _stage(sf_dir, "docs_json_corrupt")
+    path = stage_dir(sf_dir, "docs_json_corrupt")
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
